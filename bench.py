@@ -311,6 +311,9 @@ def resolve_record(
       the repo reference incomparable to every other record). Same rule as
       sf: a run at a different ``cpus`` than the existing default record
       is a different experiment and redirects to ``BENCH_LOCAL_c<n>.json``.
+      The two suffixes compose: a run differing in both goes to
+      ``BENCH_LOCAL_sf<sf>_c<n>.json``, so an sf sibling never mixes core
+      counts either.
       Records written before round 15 lack the ``cpus`` field; an unknown
       previous core count falls back to the old behavior.
     - **Noisy-run guard** (round-6 lesson): a run that self-flags noisy
@@ -334,26 +337,21 @@ def resolve_record(
             prev_sf, prev_cpus = prev0.get("sf"), prev0.get("cpus")
         except (OSError, ValueError):
             prev_sf, prev_cpus = None, None
+        suffix, differs = "", []
         if prev_sf is not None and prev_sf != sf:
-            out_name = f"BENCH_LOCAL_sf{sf}.json"
+            suffix += f"_sf{sf}"
+            differs.append(f"sf={prev_sf}")
+        if prev_cpus is not None and cpus is not None and prev_cpus != cpus:
+            suffix += f"_c{cpus}"
+            differs.append(f"cpus={prev_cpus}")
+        if suffix:
+            out_name = f"BENCH_LOCAL{suffix}.json"
             path = os.path.join(repo, out_name)
             notes["record_redirect"] = {
                 "file": out_name,
-                "note": f"existing BENCH_LOCAL.json records sf={prev_sf}; "
-                "a different-sf run never overwrites the default record",
-            }
-        elif (
-            prev_cpus is not None
-            and cpus is not None
-            and prev_cpus != cpus
-        ):
-            out_name = f"BENCH_LOCAL_c{cpus}.json"
-            path = os.path.join(repo, out_name)
-            notes["record_redirect"] = {
-                "file": out_name,
-                "note": f"existing BENCH_LOCAL.json records cpus={prev_cpus}; "
-                "a different-core-count run never overwrites the default "
-                "record",
+                "note": f"existing BENCH_LOCAL.json records "
+                f"{', '.join(differs)}; a run at a different scale factor "
+                "or core count never overwrites the default record",
             }
     keep_existing = False
     if noisy:

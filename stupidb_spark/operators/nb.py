@@ -105,12 +105,13 @@ def nb_train(
     n_total = next(int(r["nd"]) for r in counts if r["g"] == 1)
     ct_by_cls = {r["cls"]: int(r["ct"]) for r in stats if r["g"] == 0}
     nd_by_cls = {r["cls"]: int(r["nd"]) for r in counts if r["g"] == 0}
-    # classes present in BOTH maps — the old inner join's semantics (a
-    # class whose documents have zero tokens contributes no likelihoods
-    # and was dropped by nd ⋈ cc too)
+    # non-NULL classes present in BOTH maps — the old nd ⋈ cc inner join's
+    # semantics: a class whose documents have zero tokens contributes no
+    # likelihoods, and a NULL label never equals itself so it forms no
+    # class (its rows still count toward n_total and v_global)
     rows = [
         (c, nd_by_cls[c], ct_by_cls[c])
-        for c in sorted(set(nd_by_cls) & set(ct_by_cls))
+        for c in sorted(set(nd_by_cls) & set(ct_by_cls) - {None})
     ]
     cls_type = dict(ref.dtypes)[cls_col]
     local = spark.createDataFrame(

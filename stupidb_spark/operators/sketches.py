@@ -64,39 +64,28 @@ def sketch_ingest_stream(
     *,
     checkpoint_dir: str,
     lg_k: int = 12,
-) -> None:
+) -> list[dict]:
     """Maintain a persisted sketch table FROM A STREAM, incrementally:
     each micro-batch aggregates to per-bucket sketch rows and lands them
     as its own ``batch_id=<n>`` partition — append-only epochs, no
-    read-modify-write.
+    read-modify-write. Returns the stream's progress reports.
 
     The HLL merge law makes this the whole maintenance story: readers
     answer any rollup with :func:`sketch_rollup` over the read-back, and
     grouping by bucket automatically unions each bucket's per-epoch blobs
     — union-of-epoch-sketches estimates exactly what one sketch of all
     the data estimates (pinned stream == batch in tests/test_udaf.py).
-    Keying writes by ``batchId`` with dynamic partition overwrite makes
-    replays idempotent (the ``run_to_parquet_idempotent`` recipe), and an
+    ``run_stream``'s epoch writer makes replays idempotent, and an
     optional background compaction is just ``sketch_table``-shaped
     re-aggregation of old epochs — never a rescan of raw events.
     """
+    from stupidb_spark.streaming.events import run_stream
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            sketch_table(batch_df, bucket_cols, value_col, lg_k=lg_k)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return run_stream(
+        stream_df,
+        path,
+        checkpoint_dir=checkpoint_dir,
+        per_batch=lambda b: sketch_table(b, bucket_cols, value_col, lg_k=lg_k),
     )
 
 

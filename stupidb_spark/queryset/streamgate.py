@@ -4,7 +4,7 @@ The events queries gate the batch twins of the streaming window operators;
 these two go further: each registered callable RUNS a real Structured
 Streaming job (file source staged into multiple files, one micro-batch per
 file, ``availableNow`` trigger, idempotent ``foreachBatch`` parquet sink —
-``streaming/events.py::run_to_parquet_idempotent``) and returns the
+``streaming/events.py::run_stream``) and returns the
 READ-BACK of what the stream wrote. Because the transforms are stateless
 per-row Column/Arrow expressions, the set of rows the stream produces is
 deterministic regardless of how the files batch, so the driver's DuckDB
@@ -17,6 +17,10 @@ the written parquet lazily, so cleanup must not race the driver's collect.
 (Single-writer assumption: two processes running the SAME gate query on
 the SAME fixture concurrently would race on this directory; the driver,
 pytest, and the bench all run queries sequentially within a fixture.)
+
+Streams run on the caller's session. That same sequential use is why the
+stateful gates' state-partition pin, which ``run_stream`` holds on the
+caller's session only across ``start()``, is never seen by another query.
 """
 
 from __future__ import annotations
@@ -35,8 +39,8 @@ from stupidb_spark.queryset.text import _duck_score, _duck_words, _DUCK_WTOKS
 from stupidb_spark.sources import load_table
 from stupidb_spark.streaming.events import (
     dir_bytes,
-    run_complete_to_parquet_epochs,
-    run_to_parquet_idempotent,
+    read_stream_output,
+    run_stream,
     size_state_partitions,
 )
 
@@ -52,6 +56,56 @@ _SCRATCH = os.path.join(
 _N_INGEST_FILES = 3
 
 
+def _stream_root(name: str, sf_dir: str) -> str:
+    """Wipe and return the gate's scratch directory for this fixture."""
+    root = os.path.join(
+        _SCRATCH, f"{name}-{os.path.basename(os.path.normpath(sf_dir))}"
+    )
+    shutil.rmtree(root, ignore_errors=True)
+    return root
+
+
+def _run_and_read_back(
+    spark: SparkSession,
+    root: str,
+    build,
+    stream_reader,
+    *,
+    output_mode: str,
+    stateful: bool,
+) -> DataFrame:
+    """Stream ``root/ingest`` (one micro-batch per staged file) through
+    ``build`` into ``root/out`` and return the read-back without the
+    sink's ``batch_id`` column.
+
+    ``stateful`` sizes the state partitioning to the staged volume rather
+    than inheriting the session's batch tuning or the core count: one
+    state store per shuffle partition per micro-batch, so even the core
+    count over-shards a sub-MB micro-batch (32 -> sized 8 took the
+    tumbling gate 4.2 -> 2.5 s and the append session gate 6.7 -> 3.5 s,
+    identical read-backs; see ``size_state_partitions``). Stateless
+    streams pin nothing."""
+    ingest = os.path.join(root, "ingest")
+    out = os.path.join(root, "out")
+    state_partitions = None
+    if stateful:
+        state_partitions = size_state_partitions(
+            dir_bytes(ingest),
+            _N_INGEST_FILES,
+            spark.sparkContext.defaultParallelism,
+        )
+    run_stream(
+        build(stream_reader(spark, ingest, max_files_per_trigger=1)),
+        out,
+        checkpoint_dir=os.path.join(root, "ck"),
+        output_mode=output_mode,
+        state_partitions=state_partitions,
+    )
+    return read_stream_output(spark, out, output_mode=output_mode).drop(
+        "batch_id"
+    )
+
+
 def _run_staged_stream(
     name: str,
     sf_dir: str,
@@ -61,69 +115,24 @@ def _run_staged_stream(
     *,
     complete_final: bool = False,
 ) -> DataFrame:
-    """Stage ``staged`` as parquet files, run ``build(stream)`` to the
-    idempotent parquet sink, return the read-back (minus the sink's
-    ``batch_id`` partition column).
+    """Stage ``staged`` as ``_N_INGEST_FILES`` parquet files and return
+    the read-back of ``build(stream)``.
 
     ``complete_final=True`` is the stateful-aggregation route: the stream
-    runs in COMPLETE output mode, every micro-batch landing the full
-    current result as its own epoch, and the read-back keeps only the
-    final epoch — which, once ``availableNow`` drains the staged files,
-    is the aggregation over all of them and therefore hash-comparable to
-    the batch oracle (see ``run_complete_to_parquet_epochs``)."""
-    spark = staged.sparkSession
-    root = os.path.join(
-        _SCRATCH, f"{name}-{os.path.basename(os.path.normpath(sf_dir))}"
+    runs in COMPLETE output mode and the read-back keeps only the final
+    epoch — which, once ``availableNow`` drains the staged files, is the
+    aggregation over all of them and therefore hash-comparable to the
+    batch oracle (see ``run_stream``)."""
+    root = _stream_root(name, sf_dir)
+    staged.repartition(_N_INGEST_FILES).write.parquet(os.path.join(root, "ingest"))
+    return _run_and_read_back(
+        staged.sparkSession,
+        root,
+        build,
+        stream_reader,
+        output_mode="complete" if complete_final else "append",
+        stateful=complete_final,
     )
-    shutil.rmtree(root, ignore_errors=True)
-    ingest = os.path.join(root, "ingest")
-    staged.repartition(_N_INGEST_FILES).write.parquet(ingest)
-    # Stateful (complete-mode) runs execute on a conf-ISOLATED twin session
-    # (same JVM/SparkContext, fresh SQLConf): the state-partition pin the
-    # runner sets for the stream's duration — and any nanosAsLong sniff the
-    # reader flips — can then never leak into whatever else runs on the
-    # shared session concurrently (r14 verdict "What's wrong" #3). The
-    # stream reads/writes only instants and decimals, so the result is
-    # independent of the twin's session-level conf; the read-back below
-    # stays on the caller's session. The stateless route keeps the shared
-    # session: it pins nothing, and its builds may reference batch
-    # DataFrames (closures, stream-static join sides) created there.
-    stream_session = spark.newSession() if complete_final else spark
-    stream = stream_reader(stream_session, ingest, max_files_per_trigger=1)
-    out = os.path.join(root, "out")
-    if complete_final:
-        # State partitioning sized to the staged volume, not inherited
-        # from the session's batch tuning NOR pinned at the core count:
-        # one state store per shuffle partition per micro-batch means an
-        # inherited wide-cluster 2000 multiplies pure overhead on a
-        # dashboard-cardinality aggregate (22× on the fan-out proxy
-        # before the r13 pin), and even the core count over-shards a
-        # sub-MB micro-batch (r14: 32 → sized-8 took the tumbling gate
-        # 4.2 → 2.5 s with an identical read-back; see
-        # size_state_partitions for the measurement and the scale story).
-        run_complete_to_parquet_epochs(
-            build(stream),
-            out,
-            checkpoint_dir=os.path.join(root, "ck"),
-            state_partitions=size_state_partitions(
-                dir_bytes(ingest),
-                _N_INGEST_FILES,
-                spark.sparkContext.defaultParallelism,
-            ),
-            max_sink_files=8,
-        )
-        final = max(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith("batch_id=")
-        )
-        back = spark.read.parquet(out)
-        # Partition filter — only the final epoch's directory is scanned.
-        return back.filter(F.col("batch_id") == final).drop("batch_id")
-    run_to_parquet_idempotent(
-        build(stream), out, checkpoint_dir=os.path.join(root, "ck")
-    )
-    return spark.read.parquet(out).drop("batch_id")
 
 
 def _run_staged_stream_ordered(
@@ -135,13 +144,13 @@ def _run_staged_stream_ordered(
     *,
     order_cols: tuple[str, ...] = ("ts", "event_id"),
 ) -> DataFrame:
-    """Append-mode variant of :func:`_run_staged_stream` with TIME-ORDERED
-    staging: rows are split into ``_N_INGEST_FILES`` contiguous ranges of
-    the total ``order_cols`` order, written as one file each with
-    ascending mtimes so the file source replays them in time order. With
-    ordered batches the late-row filter (which lags the eviction
-    watermark by one batch, SPARK-24634) can never drop a row, so the
-    append-mode emitted set is exactly the batch result restricted to
+    """Stateful append-mode variant of :func:`_run_staged_stream` with
+    TIME-ORDERED staging: rows are split into ``_N_INGEST_FILES``
+    contiguous ranges of the total ``order_cols`` order, written as one
+    file each with ascending mtimes so the file source replays them in
+    time order. With ordered batches the late-row filter (which lags the
+    eviction watermark by one batch, SPARK-24634) can never drop a row, so
+    the append-mode emitted set is exactly the batch result restricted to
     watermark-finalized windows — the production eviction semantics the
     complete-mode gates deliberately bypass.
 
@@ -153,11 +162,7 @@ def _run_staged_stream_ordered(
 
     from pyspark.sql import Window
 
-    spark = staged.sparkSession
-    root = os.path.join(
-        _SCRATCH, f"{name}-{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _stream_root(name, sf_dir)
     ingest = os.path.join(root, "ingest")
     os.makedirs(ingest)
     n = staged.count()
@@ -168,15 +173,12 @@ def _run_staged_stream_ordered(
         (i * n + _N_INGEST_FILES - 1) // _N_INGEST_FILES
         for i in range(_N_INGEST_FILES + 1)
     ]
-    # ONE write for all ranges, not one sort+write job per range: the
-    # row_number above is a single-task global sort, and the previous
-    # per-range loop re-ran it _N_INGEST_FILES times (4 jobs total with
-    # the count). Bucketing by the SAME exact bounds and hash-partitioning
-    # on the bucket id lands each range in exactly one task, so
-    # partitionBy writes exactly one file per range — identical batch
-    # membership, one sort. Within-file row order differs from the old
-    # per-range files, which is immaterial to the read-back: a file is
-    # one micro-batch, and watermark advance (max event time) and the
+    # ONE write for all ranges, not one sort+write job per range (the
+    # row_number above is a single-task global sort). Bucketing by the
+    # exact bounds and hash-partitioning on the bucket id lands each range
+    # in exactly one task, so partitionBy writes exactly one file per
+    # range. Row order within a file is immaterial: a file is one
+    # micro-batch, and watermark advance (max event time) and the
     # windowed aggregation are both order-insensitive within a batch.
     bounds_arr = F.array(*[F.lit(b) for b in bounds[1:-1]])
     bucketed = ranked.withColumn(
@@ -195,28 +197,14 @@ def _run_staged_stream_ordered(
         os.rename(files[0], dst)
         # FileStreamSource orders new files by modification time; pin it.
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    # Stateful append route: same conf-isolated twin session as the
-    # complete-mode runner (see _run_staged_stream) so the state-partition
-    # pin below cannot leak into the shared session.
-    stream = stream_reader(spark.newSession(), ingest, max_files_per_trigger=1)
-    out = os.path.join(root, "out")
-    run_to_parquet_idempotent(
-        build(stream),
-        out,
-        checkpoint_dir=os.path.join(root, "ck"),
-        # This harness exists for STATEFUL append routes (the session
-        # gate) — size state partitioning to the staged volume like the
-        # complete-mode gates (the round-13 fan-out proxy measured 18.1×
-        # at an inherited 2000; r14 measured 32 → sized-8 taking this
-        # gate 6.7 → 3.5 s with an identical read-back; see
-        # size_state_partitions).
-        state_partitions=size_state_partitions(
-            dir_bytes(ingest),
-            _N_INGEST_FILES,
-            spark.sparkContext.defaultParallelism,
-        ),
+    return _run_and_read_back(
+        staged.sparkSession,
+        root,
+        build,
+        stream_reader,
+        output_mode="append",
+        stateful=True,
     )
-    return spark.read.parquet(out).drop("batch_id")
 
 
 @q(

@@ -24,8 +24,8 @@ from stupidb_spark.streaming.embeddings import (
 from stupidb_spark.streaming.events import (
     attribution_stream,
     deduped_stream,
-    run_complete_to_parquet_epochs,
-    run_to_memory,
+    read_stream_output,
+    run_stream,
     sessionized_stream,
     sliding_stream,
     stream_events,
@@ -41,8 +41,8 @@ __all__ = [
     "attribution_stream",
     "deduped_stream",
     "user_running_totals",
-    "run_to_memory",
-    "run_complete_to_parquet_epochs",
+    "run_stream",
+    "read_stream_output",
     "stream_documents",
     "lm_scored_stream",
     "dup_flagged_stream",

@@ -7,7 +7,7 @@ in batch is the semantics the stream computes incrementally.
 
 Scale design (what changes on a real cluster, none of which changes the
 code): the file source becomes Kafka; ``availableNow`` becomes a continuous
-trigger; the memory sink becomes a parquet/Delta sink with checkpointing.
+trigger; the per-epoch parquet sink (``run_stream``) can become Delta.
 Watermarks bound state: a ``1 hour`` watermark means a window's state is
 dropped once the event-time high-water-mark passes its end — state size is
 O(active windows × keys), independent of stream length. The stateful
@@ -18,7 +18,8 @@ answer) as a hot groupBy key in batch.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+import os
+from typing import Callable, Iterator, Tuple
 
 import pandas as pd
 
@@ -330,34 +331,8 @@ def user_running_totals(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sinks
+# runner
 # ---------------------------------------------------------------------------
-
-
-def run_to_memory(
-    stream_df: DataFrame,
-    name: str,
-    *,
-    output_mode: str = "complete",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Run a streaming query to completion on the currently-staged files
-    (``availableNow`` trigger) into an in-memory table; return the result.
-
-    Test/demo sink — a production pipeline would use a durable sink +
-    checkpoint and a continuous trigger instead; the query shape is the same.
-    """
-    writer = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    query.awaitTermination()
-    return stream_df.sparkSession.table(name)
 
 
 def size_state_partitions(
@@ -397,158 +372,116 @@ def size_state_partitions(
 def dir_bytes(path: str) -> int:
     """Driver-side total size of the parquet files under ``path`` — the
     staged stream input volume, free to compute (no Spark job)."""
-    import os as _os
-
     total = 0
-    for root, _dirs, files in _os.walk(path):
+    for root, _dirs, files in os.walk(path):
         for f in files:
             if not f.startswith((".", "_")):
-                total += _os.path.getsize(_os.path.join(root, f))
+                total += os.path.getsize(os.path.join(root, f))
     return total
 
 
-def run_to_parquet_idempotent(
+# A complete-mode epoch is a bounded-cardinality snapshot, so it never
+# needs more sink files than this (measured on the sf1 gate: an inherited
+# 2000 shuffle partitions wrote 1,660 tiny files per epoch).
+COMPLETE_SINK_FILES = 8
+
+
+def write_epoch(batch_df: DataFrame, batch_id: int, path: str) -> None:
+    """Land one micro-batch as the ``batch_id=<n>`` directory under ``path``.
+
+    Structured Streaming delivers at-least-once: a crash after the write
+    but before the checkpoint commit replays the batch. Dynamic partition
+    overwrite keyed by ``batch_id`` makes the replay rewrite the same
+    directory instead of appending a duplicate, so a replayed source plus
+    this write is effectively exactly-once on plain parquet.
+    """
+    (
+        batch_df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def run_stream(
     stream_df: DataFrame,
     path: str,
     *,
     checkpoint_dir: str,
+    output_mode: str = "append",
     state_partitions: int | None = None,
-) -> None:
-    """Run the currently-staged files into a parquet tree, exactly-once
-    under retries: each micro-batch OVERWRITES its own ``batch_id=<n>``
-    directory via ``foreachBatch``.
+    per_batch: Callable[[DataFrame], DataFrame] | None = None,
+) -> list[dict]:
+    """Run the currently-staged input to completion (``availableNow``)
+    into ``path``, one :func:`write_epoch` directory per micro-batch, and
+    return the query's ``recentProgress``.
 
-    Structured Streaming guarantees at-least-once delivery to a sink — a
-    crash after writing but before committing the checkpoint replays the
-    batch. Keying the write by ``batchId`` with dynamic partition overwrite
-    makes the replay rewrite the same directory instead of appending
-    duplicates: idempotent writes + replayed source = effective
-    exactly-once, the same recipe a production job uses against any
-    non-transactional store. Readers see the union of batch directories
-    (``spark.read.parquet(path)``).
+    ``output_mode="complete"`` is for streaming aggregations: every epoch
+    is the full current result table, coalesced to
+    ``COMPLETE_SINK_FILES``, so once the staged files are drained the
+    final epoch is the aggregation over everything ingested — including
+    trailing windows an append-mode watermark never finalizes. Complete
+    mode retains every group in state, so it suits bounded-cardinality
+    rollups; unbounded-key streams use a watermarked append.
+    ``per_batch`` maps each micro-batch before it is written (e.g. to a
+    per-epoch sketch table).
 
-    ``state_partitions``: pins ``spark.sql.shuffle.partitions`` for the
-    run (restored after), exactly like
-    :func:`run_complete_to_parquet_epochs` — REQUIRED for STATEFUL
-    append-mode queries (watermarked session/window aggregations): one
-    state-store instance per shuffle partition per micro-batch, AQE
-    never coalesces stateful stream shuffles, and state partitioning is
-    locked into the checkpoint, so an inherited batch-tuned 2000
-    multiplies pure commit overhead (measured on the round-13 fan-out
-    proxy: the append session gate ran 18.1× slower at 2000 than at 32
-    before this pin). Size it to open-state cardinality per watermark
-    horizon, then keep it forever. Stateless map-only streams (no
-    shuffle) can leave it None.
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
+    query. Stateful queries need it: there is one state-store instance per
+    shuffle partition per micro-batch, AQE never coalesces stateful stream
+    shuffles, and the count is locked into the checkpoint, so an inherited
+    batch-tuned width is pure commit overhead (measured: an inherited 2000
+    ran the sf1 tumbling gate in 140.2 s vs 6.3 s at 32, and the append
+    session gate 18.1x slower). Stateless streams leave it None.
 
-    SCOPE CAVEAT: the pin sets ``spark.sql.shuffle.partitions`` on the
-    SHARED SparkSession for the duration of the run (restored in
-    ``finally``) — Spark exposes no per-query knob for the state-store
-    partition count, it is fixed at first checkpoint from the session
-    conf. Anything else executing on the same session while this stream
-    runs (a parallel sweep, another notebook cell) silently inherits the
-    pinned width, and an exception between set and restore is covered by
-    the ``finally`` but the window during the run is not. Run stateful
-    streams on a dedicated session (``spark.newSession()`` shares the
-    JVM but isolates the conf) when anything runs concurrently — the
-    stream gates (``queryset/streamgate.py``) build their stateful
-    streams on exactly such a twin session, so their pins can never leak.
+    The pin relies on one invariant: Spark clones the session's conf into
+    the query inside ``start()``, so setting the pin just before
+    ``start()`` and restoring it right after gives every micro-batch the
+    pinned width while the caller's session carries it only for the
+    duration of this call. Every caller (driver, pytest, bench) runs its
+    queries sequentially (``queryset/streamgate.py`` module docstring), so
+    nothing else observes that window.
     """
     spark = stream_df.sparkSession
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        if per_batch is not None:
+            batch_df = per_batch(batch_df)
+        if output_mode == "complete":
+            batch_df = batch_df.coalesce(COMPLETE_SINK_FILES)
+        write_epoch(batch_df, batch_id, path)
 
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
-        (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        query = writer.start()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    query.awaitTermination()
+    return query.recentProgress
 
 
-def run_complete_to_parquet_epochs(
-    stream_df: DataFrame,
-    path: str,
-    *,
-    checkpoint_dir: str,
-    state_partitions: int | None = None,
-    max_sink_files: int = 32,
-) -> None:
-    """COMPLETE-mode variant of :func:`run_to_parquet_idempotent` for
-    streaming AGGREGATIONS: each micro-batch writes the FULL current
-    result table as its own ``batch_id=<n>`` epoch (same
-    dynamic-partition-overwrite idempotency under replays). Readers take
-    the max-epoch partition — after ``availableNow`` drains the staged
-    files, the final epoch is by definition the aggregation over
-    everything ingested, so it must equal the batch twin exactly,
-    including the trailing windows an append-mode watermark can never
-    finalize (a window containing the max event time always ends after
-    the final watermark).
-
-    The bounded-state contract is the caller's: complete mode retains
-    every group in the state store, so this route is for
-    bounded-cardinality rollups (window × type dashboards). Unbounded-key
-    streams use the watermarked append route (:func:`tumbling_stream`
-    through :func:`run_to_parquet_idempotent`), whose eviction semantics
-    are pinned in tests/test_streaming.py.
-
-    **Partitioning is a deliberate choice here, not an inherited one.**
-    A streaming aggregation creates one state-store instance per shuffle
-    partition per micro-batch, and AQE never coalesces stateful stream
-    shuffles — so letting a batch-tuned ``spark.sql.shuffle.partitions``
-    (say 2000, the wide-cluster proxy) leak into a dashboard-sized
-    rollup's state multiplies fixed state/commit overhead by partition
-    count with zero data to amortize it (measured on the sf1 gate:
-    140.2 s at an inherited 2000 vs 6.3 s at 32 — 2000 state stores ×
-    4 batches plus 1,660 sink files per epoch). ``state_partitions``
-    pins the aggregation's state partitioning for the duration of the
-    run (the value a production job sizes to its GROUP CARDINALITY and
-    then keeps forever — state partitioning is locked into the
-    checkpoint); the epoch writer additionally coalesces each complete
-    snapshot to ≤ ``max_sink_files`` files, since a bounded-cardinality
-    result never needs thousands of tiny parquet files.
-    """
-    spark = stream_df.sparkSession
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.coalesce(max_sink_files)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            # Read at query START (this runner owns the checkpoint for the
-            # whole run, so the pinned value is self-consistent); restored
-            # before returning so batch plans in the session are untouched.
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        (
-            stream_df.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+def read_stream_output(
+    spark: SparkSession, path: str, *, output_mode: str
+) -> DataFrame:
+    """Read back what :func:`run_stream` wrote to ``path``, keeping the
+    ``batch_id`` column: the final epoch in complete mode (the full
+    result), every epoch otherwise (each row emitted once)."""
+    back = spark.read.parquet(path)
+    if output_mode != "complete":
+        return back
+    final = max(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(path)
+        if d.startswith("batch_id=")
+    )
+    # Partition filter: only the final epoch's directory is scanned.
+    return back.filter(F.col("batch_id") == final)

@@ -337,3 +337,20 @@ def test_same_cpus_and_legacy_record_without_cpus_take_default_path(tmp_path):
         0.1, 80.0, TIMINGS, False, repo=str(tmp_path), env={}, cpus=32
     )
     assert path == str(tmp_path / "BENCH_LOCAL.json") and "record_redirect" not in notes
+
+
+def test_different_sf_and_cpus_compose_both_suffixes(tmp_path):
+    # an sf0.01 run on 4 cores against a 32-core sf0.1 default record must
+    # not land in the plain sf sibling, where another core count may live
+    _write(tmp_path / "BENCH_LOCAL.json", 0.1, 87.4)
+    with open(tmp_path / "BENCH_LOCAL.json") as f:
+        rec = json.load(f)
+    rec["cpus"] = 32
+    with open(tmp_path / "BENCH_LOCAL.json", "w") as f:
+        json.dump(rec, f)
+    path, keep, notes = resolve_record(
+        0.01, 20.0, TIMINGS, False, repo=str(tmp_path), env={}, cpus=4
+    )
+    assert path == str(tmp_path / "BENCH_LOCAL_sf0.01_c4.json")
+    assert not keep
+    assert notes["record_redirect"]["file"] == "BENCH_LOCAL_sf0.01_c4.json"

@@ -3,7 +3,8 @@
 custom stateful state must carry across micro-batches.
 
 Staging: streaming file sources need a directory; fixture parquet is staged
-under the repo-local scratch dir (never writing outside /root/repo).
+under the repo-local scratch dir. Every stream runs through ``run_stream``
+into a sink and checkpoint under pytest's ``tmp_path``.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ import pytest
 from stupidb_spark.queryset import QUERIES
 from stupidb_spark.streaming import (
     deduped_stream,
-    run_to_memory,
+    read_stream_output,
+    run_stream,
     sessionized_stream,
     stream_events,
     tumbling_stream,
@@ -38,6 +40,21 @@ def staged_events():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _run(spark, stream, tmp_path, *, output_mode="append"):
+    """Run ``stream`` to a fresh sink under ``tmp_path``; return what it
+    wrote (the final epoch in complete mode) without ``batch_id``."""
+    out = tmp_path / f"out-{uuid.uuid4().hex[:8]}"
+    run_stream(
+        stream,
+        str(out),
+        checkpoint_dir=str(out) + "-ck",
+        output_mode=output_mode,
+    )
+    return read_stream_output(spark, str(out), output_mode=output_mode).drop(
+        "batch_id"
+    )
+
+
 def _assert_same(stream_df, batch_df):
     s_cols, b_cols = list(stream_df.columns), list(batch_df.columns)
     assert sorted(s_cols) == sorted(b_cols)
@@ -46,33 +63,29 @@ def _assert_same(stream_df, batch_df):
     assert left == right
 
 
-def test_tumbling_stream_equals_batch(spark, staged_events):
+def test_tumbling_stream_equals_batch(spark, staged_events, tmp_path):
     stream = tumbling_stream(stream_events(spark, str(staged_events)))
-    result = run_to_memory(stream, "t_tumbling")
+    result = _run(spark, stream, tmp_path, output_mode="complete")
     _assert_same(result, QUERIES["events_tumbling"](spark, SF_DIR))
 
 
-def test_session_stream_equals_batch(spark, staged_events):
+def test_session_stream_equals_batch(spark, staged_events, tmp_path):
     stream = sessionized_stream(stream_events(spark, str(staged_events)))
-    result = run_to_memory(stream, "t_session")
+    result = _run(spark, stream, tmp_path, output_mode="complete")
     _assert_same(result, QUERIES["events_session"](spark, SF_DIR))
 
 
-def test_attribution_stream_equals_batch(spark, staged_events):
+def test_attribution_stream_equals_batch(spark, staged_events, tmp_path):
     """Stream-stream interval join (views ⋈ clicks within the horizon) must
     produce exactly the batch twin's pairs."""
     from stupidb_spark.streaming import attribution_stream
 
     stream = attribution_stream(stream_events(spark, str(staged_events)))
-    ckpt = str(staged_events) + "-ckpt"
-    result = run_to_memory(
-        stream, "t_attribution", output_mode="append", checkpoint_dir=ckpt
-    )
+    result = _run(spark, stream, tmp_path)
     _assert_same(result, QUERIES["events_attribution"](spark, SF_DIR))
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_deduped_stream_drops_cross_batch_duplicates(spark, staged_events):
+def test_deduped_stream_drops_cross_batch_duplicates(spark, staged_events, tmp_path):
     """Stage the fixture twice (two micro-batches of identical events —
     an at-least-once redelivery); the deduped stream must equal the batch
     rowset exactly once, which requires dedup state to span the batch
@@ -89,23 +102,16 @@ def test_deduped_stream_drops_cross_batch_duplicates(spark, staged_events):
     sample.write.mode("append").parquet(str(staged_events / "b0"))
     sample.write.mode("append").parquet(str(staged_events / "b1"))
     stream = stream_events(spark, str(staged_events) + "/*", max_files_per_trigger=1)
-    ckpt = str(staged_events) + "-ckpt"
-    result = run_to_memory(
-        deduped_stream(stream),
-        "t_dedup_stream",
-        output_mode="append",
-        checkpoint_dir=ckpt,
-    )
+    result = _run(spark, deduped_stream(stream), tmp_path)
     expected = (
         load_table(spark, SF_DIR, "events")
         .filter(F.col("event_id") < 500)
         .dropDuplicates(["event_id"])
     )
     _assert_same(result, expected)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_stateful_running_totals_across_batches(spark, staged_events):
+def test_stateful_running_totals_across_batches(spark, staged_events, tmp_path):
     """Split the fixture into 2 files → 2 micro-batches; the stateful
     operator's final per-user totals must equal the global batch totals,
     which is only possible if state carried across the batch boundary."""
@@ -130,64 +136,47 @@ def test_stateful_running_totals_across_batches(spark, staged_events):
     stream = stream_events(
         spark, str(staged_events) + "/*", max_files_per_trigger=1
     )
-    ckpt = str(staged_events) + "-ckpt"
-    result = run_to_memory(
+    out = str(tmp_path / "out")
+    run_stream(
         user_running_totals(stream),
-        "t_stateful",
+        out,
+        checkpoint_dir=str(tmp_path / "ck"),
         output_mode="update",
-        checkpoint_dir=ckpt,
     )
-    # update mode emits one row per user per touching micro-batch → keep last
-    final = (
-        result.withColumn("_seq", F.monotonically_increasing_id())
-        .groupBy("user_id")
-        .agg(F.max_by("n_events", "_seq").alias("n_events"),
-             F.max_by("total_value", "_seq").alias("total_value"))
+    result = read_stream_output(spark, out, output_mode="update")
+    # update mode emits one row per user per touching micro-batch → keep
+    # the latest epoch's row
+    final = result.groupBy("user_id").agg(
+        F.max_by("n_events", "batch_id").alias("n_events"),
+        F.max_by("total_value", "batch_id").alias("total_value"),
     )
     expected = batch.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         X.dsum("value", 4).alias("total_value"),
     )
     _assert_same(final, expected)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_idempotent_parquet_sink_survives_batch_replay(spark, staged_events):
-    """foreachBatch keyed by batch_id must be replay-safe: delivering the
-    same micro-batch twice (the at-least-once failure mode) leaves exactly
-    one copy, and the streamed rowset equals the batch rowset."""
-    from pyspark.sql import functions as F
-
+def test_idempotent_parquet_sink_survives_batch_replay(spark, staged_events, tmp_path):
+    """The epoch writer keyed by batch_id must be replay-safe: delivering
+    the same micro-batch twice (the at-least-once failure mode) leaves
+    exactly one copy, and the streamed rowset equals the batch rowset."""
     from stupidb_spark.sources import load_table
-    from stupidb_spark.streaming.events import run_to_parquet_idempotent
+    from stupidb_spark.streaming.events import write_epoch
 
-    out = str(staged_events) + "-out"
-    ckpt = str(staged_events) + "-ckpt"
+    out = str(tmp_path / "out")
     stream = stream_events(spark, str(staged_events))
-    run_to_parquet_idempotent(stream, out, checkpoint_dir=ckpt)
+    run_stream(stream, out, checkpoint_dir=str(tmp_path / "ck"))
 
-    written = spark.read.parquet(out)
     batch = load_table(spark, SF_DIR, "events")
-    assert written.count() == batch.count()
-
-    # simulate the replay: re-run batch 0's write with the same batch_id
-    def write_batch(batch_df, batch_id):
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-    # identical payload, identical batch id — must overwrite, not append
-    write_batch(batch, 0)
     assert spark.read.parquet(out).count() == batch.count()
-    _assert_same(
-        spark.read.parquet(out).drop("batch_id"),
-        batch,
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+
+    # the replay: batch 0 written again through the runner's own writer —
+    # identical payload, identical batch id — must overwrite, not append
+    write_epoch(batch, 0, out)
+    written = read_stream_output(spark, out, output_mode="append")
+    assert written.count() == batch.count()
+    _assert_same(written.drop("batch_id"), batch)
 
 
 def test_stream_events_refuses_empty_source_dir(spark, tmp_path):
@@ -200,7 +189,7 @@ def test_stream_events_refuses_empty_source_dir(spark, tmp_path):
 
 
 
-def test_lm_scored_stream_equals_batch(spark):
+def test_lm_scored_stream_equals_batch(spark, tmp_path):
     """Stream-static joins: documents streamed in two micro-batches, scored
     against the batch-trained LM relations, must equal the batch scorer
     row-for-row (whose semantics are DuckDB-oracled via
@@ -231,7 +220,7 @@ def test_lm_scored_stream_equals_batch(spark):
         stream = lm_scored_stream(
             stream_documents(spark, str(d), max_files_per_trigger=1), model
         )
-        got = run_to_memory(stream, "t_lm_scores")
+        got = _run(spark, stream, tmp_path, output_mode="complete")
         want = ngram_lm_score(
             docs, ref, id_col="doc_id", text_col="text", lang_col="lang", k=0.5
         )
@@ -240,7 +229,7 @@ def test_lm_scored_stream_equals_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_dup_flagged_stream_equals_batch(spark):
+def test_dup_flagged_stream_equals_batch(spark, tmp_path):
     """Ingest-time dedup: documents streamed in two micro-batches, banded
     map-side and stream-static-joined against the batch MinHash band
     index, must emit exactly the batch probe's candidate pairs."""
@@ -280,7 +269,7 @@ def test_dup_flagged_stream_equals_batch(spark):
         )
         # dropDuplicates (not an aggregation) ⇒ append mode; dedup state
         # carries across the two micro-batches
-        got = run_to_memory(stream, "t_ingest_candidates", output_mode="append")
+        got = _run(spark, stream, tmp_path)
         want = minhash_probe_candidates(
             idx,
             docs.filter(F.col("doc_id") % 5 == 0),
@@ -292,7 +281,7 @@ def test_dup_flagged_stream_equals_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_bpe_tokens_stream_equals_batch(spark):
+def test_bpe_tokens_stream_equals_batch(spark, tmp_path):
     """Streaming tokenization under a frozen batch-trained BPE rule list:
     two micro-batches of documents must emit exactly the batch encoder's
     token streams (map-only, append mode, no state)."""
@@ -315,14 +304,14 @@ def test_bpe_tokens_stream_equals_batch(spark):
         stream = bpe_tokens_stream(
             stream_documents(spark, str(d), max_files_per_trigger=1), merges
         ).select("doc_id", "tokens")
-        got = run_to_memory(stream, "t_bpe_tokens", output_mode="append")
+        got = _run(spark, stream, tmp_path)
         want = bpe_encode(docs, merges).select("doc_id", "tokens")
         _assert_same(got, want)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_knn_label_stream_matches_batch_mirror(spark):
+def test_knn_label_stream_matches_batch_mirror(spark, tmp_path):
     """Ingest-time kNN labeling: streamed vectors classified against a
     bounded labeled reference must reproduce the exact brute-force vote
     (the emb_knn_classify rule) per micro-batch."""
@@ -358,7 +347,7 @@ def test_knn_label_stream_matches_batch_mirror(spark):
             reference,
             k_neighbors=5,
         )
-        got_rows = run_to_memory(stream, "t_knn_labels", output_mode="append")
+        got_rows = _run(spark, stream, tmp_path)
         got = {r.vec_id: (r.pred_label, r.n_votes) for r in got_rows.collect()}
 
         rows = emb.orderBy("vec_id").collect()
@@ -381,7 +370,7 @@ def test_knn_label_stream_matches_batch_mirror(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_quality_gated_stream_equals_batch(spark):
+def test_quality_gated_stream_equals_batch(spark, tmp_path):
     """Ingest-time Gopher gate + split routing: documents streamed in two
     micro-batches must carry exactly the tags the batch queries compute
     (whose semantics are DuckDB-oracled via text_gopher_rules /
@@ -405,7 +394,7 @@ def test_quality_gated_stream_equals_batch(spark):
         stream = quality_gated_stream(
             stream_documents(spark, str(d), max_files_per_trigger=1)
         )
-        got = run_to_memory(stream, "t_quality_gate", output_mode="append")
+        got = _run(spark, stream, tmp_path)
         sig = gopher_signals("text")
         want = load_table(spark, SF_DIR, "documents").select(
             "doc_id",
@@ -493,7 +482,7 @@ def test_knn_label_stream_rejects_zero_norm_query(spark):
         labeled.collect()
 
 
-def test_label_stream_by_join_matches_batch(spark):
+def test_label_stream_by_join_matches_batch(spark, tmp_path):
     """Corpus-scale labeling route: the stream-static join of a staged
     vector stream against the persisted batch kNN vote must emit exactly
     the batch join of the same two relations (stateless, append mode) —
@@ -534,7 +523,7 @@ def test_label_stream_by_join_matches_batch(spark):
                 stream_embeddings(spark, str(d), max_files_per_trigger=1),
                 votes,
             )
-            got = run_to_memory(stream, "t_knn_join_labels", output_mode="append")
+            got = _run(spark, stream, tmp_path)
             emb = load_table(spark, SF_DIR, "embeddings")
             want = label_stream_by_join(
                 emb.filter(F.col("vec_id") % 5 == 0).drop("label"), votes
@@ -581,10 +570,7 @@ def test_watermark_finalizes_windows_and_drops_late_rows(spark):
     import datetime as dt
     import os
 
-    from stupidb_spark.streaming.events import (
-        FIXTURE_SCHEMAS,
-        run_to_parquet_idempotent,
-    )
+    from stupidb_spark.streaming.events import FIXTURE_SCHEMAS
 
     d = SCRATCH / f"stream-wm-{uuid.uuid4().hex[:8]}"
     ingest = d / "ingest"
@@ -620,13 +606,9 @@ def test_watermark_finalizes_windows_and_drops_late_rows(spark):
         stream = tumbling_stream(
             stream_events(spark, str(ingest), max_files_per_trigger=1)
         )
-        out = d / "out"
-        run_to_parquet_idempotent(
-            stream, str(out), checkpoint_dir=str(d / "ck")
-        )
         got = {
             (r["window_start"].strftime("%H:%M"), r["n_events"])
-            for r in spark.read.parquet(str(out)).collect()
+            for r in _run(spark, stream, d).collect()
         }
         # 10:45 kept (3, not 2); 09:40 dropped (no 09:00 row); open 13:xx
         # window never emitted.
@@ -650,10 +632,7 @@ def test_session_append_emits_at_exact_watermark_boundary(spark):
     import glob
     import os
 
-    from stupidb_spark.streaming.events import (
-        FIXTURE_SCHEMAS,
-        run_to_parquet_idempotent,
-    )
+    from stupidb_spark.streaming.events import FIXTURE_SCHEMAS
 
     d = SCRATCH / f"stream-sessb-{uuid.uuid4().hex[:8]}"
     ingest = d / "ingest"
@@ -671,13 +650,9 @@ def test_session_append_emits_at_exact_watermark_boundary(spark):
             str(ingest / "batch-0.parquet"),
         )
         stream = stream_events(spark, str(ingest), max_files_per_trigger=1)
-        out = str(d / "out")
-        run_to_parquet_idempotent(
-            sessionized_stream(stream), out, checkpoint_dir=str(d / "ck")
-        )
         got = sorted(
             (r.user_id, r.session_start, r.session_end)
-            for r in spark.read.parquet(out).collect()
+            for r in _run(spark, sessionized_stream(stream), d).collect()
         )
         assert got == [
             (
@@ -733,35 +708,82 @@ def test_size_state_partitions_sizing():
 
 
 def test_stateful_gates_isolate_state_partition_pin(spark, monkeypatch):
-    """Stateful gate streams run on a conf-ISOLATED twin session (round-14
-    verdict "What's wrong" #3): the runner's state-partition pin — and the
-    reader's nanosAsLong sniff — must never touch the shared session's
-    conf, even transiently while the stream is running. The stateless
-    route keeps the shared session (its builds may close over batch
-    DataFrames created there)."""
-    import stupidb_spark.streaming.embeddings as semb
+    """The stateful gates pin state partitioning on the caller's session
+    only across ``start()``: every micro-batch must run at the pinned
+    width while the caller's session reads its own value throughout."""
+    import stupidb_spark.queryset.streamgate as sg
     import stupidb_spark.streaming.events as sev
-    from tests.conftest import SF_DIR
 
-    seen_events, seen_emb = [], []
-    real_events, real_emb = sev.stream_events, semb.stream_embeddings
+    key = "spark.sql.shuffle.partitions"
+    sentinel = spark.conf.get(key)
+    pin = int(sentinel) + 3
+    seen = []
+    real_write = sev.write_epoch
 
-    def rec_events(sess, src, **kw):
-        seen_events.append(sess)
-        return real_events(sess, src, **kw)
+    def recording_write(batch_df, batch_id, path):
+        seen.append((batch_df.sparkSession.conf.get(key), spark.conf.get(key)))
+        real_write(batch_df, batch_id, path)
 
-    def rec_emb(sess, src, **kw):
-        seen_emb.append(sess)
-        return real_emb(sess, src, **kw)
-
-    monkeypatch.setattr(sev, "stream_events", rec_events)
-    monkeypatch.setattr(semb, "stream_embeddings", rec_emb)
-    sentinel = spark.conf.get("spark.sql.shuffle.partitions")
-    # complete-mode and ordered-append stateful routes → isolated session
+    monkeypatch.setattr(sev, "write_epoch", recording_write)
+    monkeypatch.setattr(sg, "size_state_partitions", lambda *a, **k: pin)
+    # complete-mode and ordered-append stateful routes, 3 staged files each
     QUERIES["stream_events_tumbling"](spark, SF_DIR).count()
     QUERIES["stream_events_session_append"](spark, SF_DIR).count()
-    assert len(seen_events) == 2 and all(s is not spark for s in seen_events)
-    # stateless route (no pin) → shared session
-    QUERIES["stream_knn_label"](spark, SF_DIR).count()
-    assert len(seen_emb) == 1 and seen_emb[0] is spark
-    assert spark.conf.get("spark.sql.shuffle.partitions") == sentinel
+    assert len(seen) >= 6
+    assert set(seen) == {(str(pin), sentinel)}
+    assert spark.conf.get(key) == sentinel
+
+
+def test_stateful_streams_resume_from_checkpoint(spark, tmp_path):
+    """Kill and restart: a stateful stream run on the first of three
+    time-ordered files, then re-run on the same checkpoint and sink once
+    the other two are staged, must write exactly what one uninterrupted
+    run over all three writes — for a complete-mode window rollup and a
+    watermarked append-mode sessionization."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet").sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")]
+    )
+    n = t.num_rows
+    parts = [t.slice(i * n // 3, (i + 1) * n // 3 - i * n // 3) for i in range(3)]
+
+    def stage(root, i):
+        (root / "ingest").mkdir(parents=True, exist_ok=True)
+        dst = root / "ingest" / f"part-{i}.parquet"
+        pq.write_table(parts[i], dst)
+        # the file source replays new files in modification-time order
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    for build, mode in ((tumbling_stream, "complete"), (sessionized_stream, "append")):
+
+        def run(root):
+            stream = stream_events(spark, str(root / "ingest"), max_files_per_trigger=1)
+            return run_stream(
+                build(stream),
+                str(root / "out"),
+                checkpoint_dir=str(root / "ck"),
+                output_mode=mode,
+                state_partitions=2,
+            )
+
+        def read(root):
+            back = read_stream_output(spark, str(root / "out"), output_mode=mode)
+            return back.drop("batch_id")
+
+        restarted = tmp_path / f"{mode}-restarted"
+        stage(restarted, 0)
+        progress = run(restarted)
+        assert sum(p["numInputRows"] for p in progress) == parts[0].num_rows
+        stage(restarted, 1)
+        stage(restarted, 2)
+        run(restarted)
+
+        whole = tmp_path / f"{mode}-whole"
+        for i in range(3):
+            stage(whole, i)
+        run(whole)
+        assert read(whole).count() > 0
+        _assert_same(read(restarted), read(whole))

@@ -10,7 +10,12 @@ from pathlib import Path
 import pytest
 
 from stupidb_spark.queryset import QUERIES
-from stupidb_spark.streaming import run_to_memory, sliding_stream, stream_events
+from stupidb_spark.streaming import (
+    read_stream_output,
+    run_stream,
+    sliding_stream,
+    stream_events,
+)
 from tests.conftest import SF_DIR, rowset
 
 SCRATCH = Path("/root/repo/.scratch")
@@ -25,9 +30,15 @@ def staged_events():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_sliding_stream_equals_batch(spark, staged_events):
+def test_sliding_stream_equals_batch(spark, staged_events, tmp_path):
     stream = sliding_stream(stream_events(spark, str(staged_events)))
-    result = run_to_memory(stream, "t_sliding")
+    out = str(tmp_path / "out")
+    run_stream(
+        stream, out, checkpoint_dir=str(tmp_path / "ck"), output_mode="complete"
+    )
+    result = read_stream_output(spark, out, output_mode="complete").drop(
+        "batch_id"
+    )
     batch = QUERIES["events_sliding"](spark, SF_DIR)
     assert sorted(result.columns) == sorted(batch.columns)
     left = rowset([tuple(r) for r in result.collect()], list(result.columns))

@@ -292,6 +292,27 @@ def test_nb_hostile_class_labels(spark):
     assert got[100][0] == "a`b" and got[101][0] == "doc" and got[102][0] == "w"
 
 
+def test_nb_null_class_label_is_dropped_not_fatal(spark):
+    """A NULL class label forms no class (SQL join semantics) but its row
+    still counts toward the document total behind every prior."""
+    import math
+
+    from stupidb_spark.operators.nb import nb_classify, nb_train
+
+    ref = spark.createDataFrame(
+        [(1, "apple banana", "fruit"), (2, "car road", "auto"), (3, "apple car", None)],
+        "id long, text string, cls string",
+    )
+    model = nb_train(ref, id_col="id", text_col="text", cls_col="cls")
+    priors = {r.cls: r.q_prior for r in model.classes.collect()}
+    assert priors == {
+        c: math.floor(math.log(1 / 3) * 1e6 + 0.5) for c in ("auto", "fruit")
+    }
+    docs = spark.createDataFrame([(10, "banana apple")], "id long, text string")
+    out = nb_classify(docs, model, id_col="id", text_col="text").collect()
+    assert [(r.doc, r.pred_cls) for r in out] == [(10, "fruit")]
+
+
 def test_dsir_weights_shift_toward_target(spark):
     """Semantic pin for the DSIR scores: averaged over the corpus, target
     (lang='en') documents must score strictly higher than non-target ones
