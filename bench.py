@@ -440,6 +440,31 @@ def run_with_steal_retries(
     return t, s_pct, True, attempt_load, attempt_log
 
 
+def summary_line(payload: dict) -> str:
+    """The compact summary printed as the bench's LAST stdout line.
+
+    A bounded tail capture can truncate the full record line above, so
+    this line must carry the per-query map on its own and stay inside a
+    ~3 KB window: ~2.4 KB at 95 queries and 3-decimal seconds. It keeps
+    the queries and drops the bulky noise block (attempts and calibration
+    live in the full line and the record file); only the two one-glance
+    noise scalars ride along.
+    """
+    return json.dumps(
+        {
+            "metric": payload["metric"],
+            "value": payload["value"],
+            "unit": payload["unit"],
+            "n": len(payload["queries"]),
+            "sf": payload["sf"],
+            "noisy": payload["noise"]["noisy"],
+            "steal_pct_max": payload["noise"]["steal_pct_max"],
+            "queries": payload["queries"],
+        },
+        separators=(",", ":"),
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -644,30 +669,9 @@ def main() -> None:
         },
         separators=(",", ":"),
     )
-    # The LAST line must carry the per-query map (round-14 verdict,
-    # "What's wrong" #2: the driver's bounded tail capture truncated the
-    # full line, and the old noise-only summary left PERF's per_query
-    # comparison empty two rounds running). Budget: ~2.4 KB at 95 queries
-    # and 3-decimal seconds vs a ~3 KB capture window — so the summary
-    # keeps queries and drops the bulky noise block (attempts/calibration
-    # live in the full line above and in the record file); only the two
-    # one-glance noise scalars ride along.
-    summary = json.dumps(
-        {
-            "metric": payload["metric"],
-            "value": payload["value"],
-            "unit": payload["unit"],
-            "n": len(timings),
-            "sf": sf,
-            "noisy": noise["noisy"],
-            "steal_pct_max": noise["steal_pct_max"],
-            "queries": timings,
-        },
-        separators=(",", ":"),
-    )
     sys.stdout.flush()
     print(line, flush=True)
-    print(summary, flush=True)
+    print(summary_line(payload), flush=True)
 
 
 if __name__ == "__main__":

@@ -17,7 +17,9 @@ probe runs it:
   draw; rounds are the metric being validated and depend on the cap walk,
   not the corpus volume).
 
-Prints one markdown row per run and ONE trailing JSON line.
+Prints one markdown row per run and ONE trailing JSON line. The session is
+the engine's (``get_session``, cores from ``SPARK_GRAFT_CPUS``); the
+SCALE.md rows were taken on 32 cores.
 
 Usage: python scripts/bpe_scale_probe.py [runs]
        runs = comma list from {deep8k,deep32k,fixed8k}; default deep8k,deep32k
@@ -79,19 +81,10 @@ def main() -> int:
     names = (
         sys.argv[1].split(",") if len(sys.argv) > 1 else ["deep8k", "deep32k"]
     )
-    from pyspark.sql import SparkSession
-
     from stupidb_spark.operators.bpe import bpe_train
+    from stupidb_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bpe-scale-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("bpe-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     results = {}

@@ -61,26 +61,20 @@ def main() -> int:
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else os.path.join(_REPO, ".scratch/sf3")
     names = sys.argv[5].split(",") if len(sys.argv) > 5 else DEFAULT_QUERIES
 
-    from pyspark.sql import SparkSession
+    from stupidb_spark.session import get_session
 
-    # get_session's configs, minus the UI (needed here for the REST metrics)
-    # and with the heap under test. local[32] like the bench: 32 concurrent
-    # tasks sharing the small unified region is exactly the pressure a
-    # packed 100 TB executor sees.
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"memory-ceiling-{heap}-{cores}c")
-        .config("spark.driver.memory", heap)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-        .getOrCreate()
+    # The engine conf with the heap and shuffle width under test, and the UI
+    # on (its REST API reports the spill metrics). local[32] like the bench:
+    # 32 concurrent tasks sharing the small unified region is exactly the
+    # pressure a packed 100 TB executor sees.
+    spark = get_session(
+        f"memory-ceiling-{heap}-{cores}c",
+        cpus=cores,
+        overrides={
+            "spark.driver.memory": heap,
+            "spark.ui.enabled": "true",
+            "spark.sql.shuffle.partitions": shuffle_parts,
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl

@@ -455,6 +455,12 @@ def _pair_overlap_counts(
     )
 
 
+# Scan bytes per task for the vectorized scorers' spread (the
+# ``bytes_per_task`` of ``spread_small_scan``): light per-byte compute, so
+# kilobyte partitions at core-count width would be pure fixed cost.
+SPREAD_BYTES_PER_TASK = 256 * 1024
+
+
 def spread_small_scan(
     df: DataFrame,
     min_partitions: int | None = None,
@@ -487,6 +493,11 @@ def spread_small_scan(
     wrong cost proxy there (the round-14 size-first-AQE rejection), and
     their 32-wide stages do ~300 ms of REAL work per task at sf0.1.
     Non-file sources fall back to the full target (size unknown).
+
+    The width is computed from on-disk parquet bytes — compressed and
+    dictionary/run-length deduplicated — not from the decoded vector
+    volume the tasks will hold, so a well-compressed scan gets a narrower
+    spread than its in-memory size would suggest.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stupidb_spark.operators.similarity import (
+    SPREAD_BYTES_PER_TASK,
     collect_query_matrix,
     spread_small_scan,
 )
@@ -279,7 +280,7 @@ def ivf_index(
         base.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
         ),
-        bytes_per_task=256 * 1024,
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
     ).withColumn(
         "cell", F.coalesce(_assign_udf(centroids)("b_vec"), F.lit(0))
     )

@@ -43,7 +43,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stupidb_spark.operators.dedup import corpus_join_strategy, spread_small_scan
+from stupidb_spark.operators.dedup import (
+    SPREAD_BYTES_PER_TASK,
+    corpus_join_strategy,
+    spread_small_scan,
+)
 from stupidb_spark.operators.lineage import cut_lineage
 from stupidb_spark.operators.ivf import (
     _normalize,
@@ -202,7 +206,7 @@ def knn_join(
     # and the spread is a no-op either way.
     probed_all = cut_lineage(
         spread_small_scan(
-            norm_guard(tagged, "knn_join"), bytes_per_task=256 * 1024
+            norm_guard(tagged, "knn_join"), bytes_per_task=SPREAD_BYTES_PER_TASK
         ).withColumn("__cells", probe(F.col("vec"))),
         eager=False,
     )

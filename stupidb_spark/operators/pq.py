@@ -46,7 +46,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stupidb_spark.operators.similarity import collect_query_matrix, spread_small_scan
+from stupidb_spark.operators.similarity import (
+    SPREAD_BYTES_PER_TASK,
+    collect_query_matrix,
+    spread_small_scan,
+)
 
 
 def pq_train(
@@ -135,7 +139,7 @@ def pq_encode(
 
     return spread_small_scan(
         base.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=256 * 1024,
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
     ).mapInPandas(encode, f"neighbor_id {id_type}, code array<int>")
 
 
@@ -325,7 +329,7 @@ def ivfpq_encode(
 
     return spread_small_scan(
         vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=256 * 1024,
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
     ).mapInPandas(enc, f"neighbor_id {id_type}, cell int, code array<int>")
 
 

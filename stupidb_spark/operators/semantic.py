@@ -33,7 +33,11 @@ from pyspark.sql import functions as F
 
 import pandas as pd
 
-from stupidb_spark.operators.dedup import corpus_join_strategy, spread_small_scan
+from stupidb_spark.operators.dedup import (
+    SPREAD_BYTES_PER_TASK,
+    corpus_join_strategy,
+    spread_small_scan,
+)
 from stupidb_spark.operators.lineage import cut_lineage
 from stupidb_spark.operators.ivf import ivf_index, ivf_refine, ivf_train
 from stupidb_spark.operators.components import connected_components
@@ -164,7 +168,7 @@ def semantic_dedup(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("b_vec"),
             ),
-            bytes_per_task=256 * 1024,
+            bytes_per_task=SPREAD_BYTES_PER_TASK,
         )
         assigned = raw.withColumn(
             "cell", _quant_assign_udf(centroids)("b_vec")

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stupidb_spark.operators.dedup import spread_small_scan
+from stupidb_spark.operators.dedup import SPREAD_BYTES_PER_TASK, spread_small_scan
 
 # 2^40 quantization grid for dot products. TWO envelopes apply:
 #   * int64 paths (_qdot, embedding_near_dup_pairs): carry
@@ -226,7 +226,7 @@ def brute_force_topk(
     # whole scoring loop on one core (at scale the scan is already wide)
     b = spread_small_scan(
         base.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")),
-        bytes_per_task=256 * 1024,
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
     )
     partials = b.mapInPandas(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
@@ -333,7 +333,7 @@ def lsh_topk(
 
     b = spread_small_scan(
         base.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")),
-        bytes_per_task=256 * 1024,
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
     )
     partials = b.mapInPandas(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
@@ -478,7 +478,7 @@ def embedding_near_dup_pairs(
     # volume-derived width (see ivf_index): this spread only feeds the
     # task-key exchange's map side; the pair scoring parallelism comes
     # from the salted (block, sub) exchange itself
-    work = spread_small_scan(raw, bytes_per_task=256 * 1024)
+    work = spread_small_scan(raw, bytes_per_task=SPREAD_BYTES_PER_TASK)
 
     id_type = dict(work.dtypes)["id"]
     out_schema = f"id_a {id_type}, id_b {id_type}, cosine_sim double"

@@ -20,6 +20,7 @@ Scale notes (100 TB design intent):
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -30,9 +31,15 @@ def get_session(
     app_name: str = "stupidb-spark",
     *,
     cpus: str | None = None,
-    shuffle_partitions: int | None = None,
+    overrides: Mapping[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or get) a SparkSession with engine defaults applied."""
+    """Create (or get) a SparkSession with engine defaults applied.
+
+    ``overrides`` are conf entries applied after the defaults, so they win
+    (heap, shuffle partitions, event log, an A/B arm's candidate conf).
+    The only bootstrap in the repo: tests, bench and scripts all build
+    their sessions here.
+    """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -42,7 +49,7 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
+            str(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -61,15 +68,19 @@ def get_session(
         )
         # AQE coalescing stays PARALLELISM-FIRST (the Spark default).
         # Size-first (parallelismFirst=false + a small advisory target)
-        # was measured this round as a candidate for killing fixed
-        # per-task overhead on tiny post-shuffle stages — and REJECTED:
-        # an interleaved A/B (scripts/ab_aqe.py, min-of-N across
-        # alternating sessions) showed ann_knn_join 1.43× SLOWER under
-        # size-first, because the quantized-scoring pandas stages are
-        # CPU-dense per byte: coalescing their kilobyte shuffles to one
-        # task serializes real compute. Bytes are the wrong cost proxy
-        # for this engine's Python stages; per-operator partition sizing
-        # (e.g. size_state_partitions for streams) is used instead.
+        # was measured as a candidate for killing fixed per-task overhead
+        # on tiny post-shuffle stages — and REJECTED: an interleaved A/B
+        # (min-of-N across alternating fresh sessions) showed ann_knn_join
+        # 1.43× SLOWER under size-first on 32 cores, because the
+        # quantized-scoring pandas stages are CPU-dense per byte:
+        # coalescing their kilobyte shuffles to one task serializes real
+        # compute. Bytes are the wrong cost proxy for this engine's Python
+        # stages; per-operator partition sizing (e.g.
+        # size_state_partitions for streams) is used instead. Reproduce:
+        #   python scripts/measure.py time ann_knn_join --fingerprint --conf
+        #   "spark.sql.adaptive.coalescePartitions.parallelismFirst=false;
+        #   spark.sql.adaptive.advisoryPartitionSizeInBytes=1m"
+        .config(map=dict(overrides or {}))
     )
     return builder.getOrCreate()
 

@@ -18,7 +18,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    session = get_session("stupidb-spark-tests", cpus="8", shuffle_partitions=8)
+    session = get_session(
+        "stupidb-spark-tests",
+        cpus="8",
+        overrides={"spark.sql.shuffle.partitions": "8"},
+    )
     yield session
 
 

@@ -280,22 +280,20 @@ def test_bench_summary_line_carries_queries_and_fits_tail_capture():
     # capture window even at the full 95-query headline with long names.
     import json as _json
 
-    from bench import HEADLINE
+    from bench import HEADLINE, summary_line
 
     # the REAL headline names at a pessimistic 3-decimal reading each
     queries = {name: 12.345 for name in HEADLINE}
-    line = _json.dumps(
+    line = summary_line(
         {
             "metric": "headline_queries_total",
             "value": 86.2,
             "unit": "sec",
-            "n": len(queries),
-            "sf": 0.1,
-            "noisy": False,
-            "steal_pct_max": 0.0,
             "queries": queries,
-        },
-        separators=(",", ":"),
+            "sf": 0.1,
+            # the bulky noise block the summary must leave to the record
+            "noise": {"noisy": False, "steal_pct_max": 0.0, "attempts": [{}] * 500},
+        }
     )
     assert len(line) < 3000
     parsed = _json.loads(line)
