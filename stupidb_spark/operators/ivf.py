@@ -18,15 +18,14 @@ inside a query:
   bounded collect.
 - :func:`ivf_index` is one map-only pass assigning every base vector to its
   cell (vectorized matmul per Arrow batch). At scale the result is written
-  partitioned/bucketed by cell (sources/bucketing.py) so probes are
-  pruned scans; locally we ``persist()`` it.
+  partitioned by cell (:func:`save_ivf_index`) so probes are pruned scans.
 - :func:`ivf_probe` explodes each query into its ``n_probe`` nearest cells
   and scores only those cells' vectors — no k-means, no full scan.
 
-:func:`ivf_topk` composes the three for one-shot use and memoizes the
-trained index per (DataFrame, params) so repeated queries against the same
-base table skip straight to the probe — the behavior a 1000-executor
-deployment gets from the bucketed index table.
+:func:`ivf_topk` composes the three for one-shot use: every call trains and
+indexes from its inputs, so a result never outlives the data it was built
+from. Reuse across calls goes through the durable index table
+(:func:`save_ivf_index` / :func:`load_ivf_index`).
 
 Deterministic: the training sample is the ``n_train`` lowest-id vectors,
 seeds are the first ``k`` of those, iteration count is fixed — same inputs,
@@ -42,11 +41,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from stupidb_spark.operators.similarity import (
     SPREAD_BYTES_PER_TASK,
     collect_query_matrix,
+    no_neighbors,
+    rank_topk,
     spread_small_scan,
 )
 
@@ -269,7 +269,12 @@ def ivf_index(
     # `cell` non-nullable, so downstream joins on it don't infer an
     # isnotnull(cell) filter — which would push below the scan spread and
     # make Catalyst evaluate the assignment UDF TWICE per subtree (see
-    # simhash_fingerprints for the observed plan shape).
+    # simhash_fingerprints for the observed plan shape). For the same
+    # reason the UDF is marked nondeterministic: a filter on `cell` (the
+    # probe's static cell set, a rebalance's hot cells) must not be pushed
+    # through it, or Catalyst re-runs the assignment below the spread, in
+    # the single-task scan stage (measured at sf0.1 on 4 cores:
+    # ann_topk_ivf 1.50 s with the second pass, 1.32-1.35 s without).
     #
     # Volume-derived spread width (guide §2, the knn_join probe rule): the
     # assignment is a vectorized matmul — light per byte — so core-count
@@ -282,7 +287,8 @@ def ivf_index(
         ),
         bytes_per_task=SPREAD_BYTES_PER_TASK,
     ).withColumn(
-        "cell", F.coalesce(_assign_udf(centroids)("b_vec"), F.lit(0))
+        "cell",
+        F.coalesce(_assign_udf(centroids).asNondeterministic()("b_vec"), F.lit(0)),
     )
 
 
@@ -310,18 +316,19 @@ def ivf_probe(
     """
     from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
 
+    id_type = dict(indexed.dtypes)["neighbor_id"]
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     # ONE collect: the same (ids, matrix) drives cell selection and the
     # scorer — the query side never touches Spark again.
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
+    if not len(q_ids):
+        return no_neighbors(indexed, out_schema, "cosine_sim", k)
     cells = _probe_cells(Q, centroids, n_probe)
     qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
     # (nq, n_centroids) membership mask: does query j probe cell c?
     probe_mask = np.zeros((len(q_ids), len(centroids)), dtype=bool)
     for j, row in enumerate(cells):
         probe_mask[j, row] = True
-
-    id_type = dict(indexed.dtypes)["neighbor_id"]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
 
     def score(batches):
         for pdf in batches:
@@ -355,30 +362,25 @@ def ivf_probe(
     partials = indexed.filter(F.col("cell").isin(probed)).mapInPandas(
         score, out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rk")
-    )
+    return rank_topk(partials, "cosine_sim", k)
 
 
 @dataclass
-class _CachedIndex:
+class IvfIndex:
+    """A trained coarse quantizer and the (neighbor_id, b_vec, cell)
+    assignment of the indexed vectors."""
+
     centroids: np.ndarray
     indexed: DataFrame
 
 
-def save_ivf_index(idx: _CachedIndex, path: str) -> None:
+def save_ivf_index(idx: IvfIndex, path: str) -> None:
     """Persist an index as a table: the cell assignment partitioned by
     ``cell`` (so :func:`ivf_probe`'s static cell filter prunes to probed
     partitions at scan time) plus the centroid matrix as model metadata.
 
-    This is the durable form of :func:`build_ivf_index`'s in-session
-    ``persist()`` — on a cluster the index outlives the session and is
-    shared by every probing job.
+    This is the durable form of :func:`build_ivf_index`: the index
+    outlives the session and is shared by every probing job.
     """
     idx.indexed.write.partitionBy("cell").mode("overwrite").parquet(
         f"{path}/cells"
@@ -390,13 +392,13 @@ def save_ivf_index(idx: _CachedIndex, path: str) -> None:
     ).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def load_ivf_index(spark, path: str) -> _CachedIndex:
+def load_ivf_index(spark, path: str) -> IvfIndex:
     """Load a :func:`save_ivf_index` table; probes against it scan only the
     probed cell partitions."""
     cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     centroids = np.stack([np.array(r.centroid, dtype=np.float64) for r in cent_rows])
     indexed = spark.read.parquet(f"{path}/cells")
-    return _CachedIndex(centroids=centroids, indexed=indexed)
+    return IvfIndex(centroids=centroids, indexed=indexed)
 
 
 def check_ivf_index(spark, path: str) -> dict:
@@ -441,12 +443,12 @@ def check_ivf_index(spark, path: str) -> dict:
 
 
 def ivf_append(
-    idx: _CachedIndex,
+    idx: IvfIndex,
     new_vectors: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> _CachedIndex:
+) -> IvfIndex:
     """Append new vectors to an existing index WITHOUT retraining: assign
     them to the frozen coarse quantizer's cells (one map-only pass over the
     new vectors only) and union with the existing assignment.
@@ -462,7 +464,7 @@ def ivf_append(
     appended volume exceeds the originally-indexed volume.
     """
     assigned = ivf_index(new_vectors, idx.centroids, id_col=id_col, vec_col=vec_col)
-    return _CachedIndex(
+    return IvfIndex(
         centroids=idx.centroids,
         indexed=idx.indexed.unionByName(assigned),
     )
@@ -512,7 +514,7 @@ class RebalanceResult:
     the split map ``{parent_cell: [new_cell_ids...]}`` (empty = no cell was
     hot; the first id of every family is the parent's own, reused)."""
 
-    index: _CachedIndex
+    index: IvfIndex
     split: dict[int, list[int]]
 
 
@@ -567,7 +569,7 @@ def _cell_sample(
 
 
 def ivf_rebalance(
-    idx: _CachedIndex,
+    idx: IvfIndex,
     *,
     max_ratio: float = 8.0,
     target_ratio: float = 2.0,
@@ -651,7 +653,7 @@ def ivf_rebalance(
         reassign_udf("b_vec", "cell").alias("cell"),
     )
     cold_rows = idx.indexed.filter(~F.col("cell").isin(hot))
-    new_idx = _CachedIndex(
+    new_idx = IvfIndex(
         centroids=np.stack(centroids),
         indexed=cold_rows.unionByName(hot_rows),
     )
@@ -726,11 +728,6 @@ def rebalance_ivf_index(spark, path: str, **kwargs) -> dict[int, list[int]]:
     return res.split
 
 
-# Memoized per-base-table index; keyed by the base plan + build params so a
-# different table or config trains its own index.
-_INDEX_CACHE: dict[tuple, _CachedIndex] = {}
-
-
 def build_ivf_index(
     base: DataFrame,
     *,
@@ -738,21 +735,14 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     iters: int = 3,
-    cache_key: str | None = None,
-) -> _CachedIndex:
-    """Train + index once, persist the assignment, memoize. ``cache_key``
-    (e.g. the source path) scopes reuse; None disables memoization."""
-    key = (cache_key, id_col, vec_col, n_centroids, iters)
-    if cache_key is not None and key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+) -> IvfIndex:
+    """Train the coarse quantizer on a bounded sample and assign every base
+    vector to its cell (lazy: the assignment runs in the caller's jobs)."""
     centroids = ivf_train(
         base, id_col=id_col, vec_col=vec_col, k=n_centroids, iters=iters
     )
-    indexed = ivf_index(base, centroids, id_col=id_col, vec_col=vec_col).persist()
-    built = _CachedIndex(centroids=centroids, indexed=indexed)
-    if cache_key is not None:
-        _INDEX_CACHE[key] = built
-    return built
+    indexed = ivf_index(base, centroids, id_col=id_col, vec_col=vec_col)
+    return IvfIndex(centroids=centroids, indexed=indexed)
 
 
 def ivf_topk(
@@ -765,16 +755,14 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 6,
     iters: int = 3,
-    cache_key: str | None = None,
 ) -> DataFrame:
-    """IVF-Flat top-k = build (memoized when ``cache_key`` given) + probe."""
+    """IVF-Flat top-k = build + probe."""
     idx = build_ivf_index(
         base,
         id_col=id_col,
         vec_col=vec_col,
         n_centroids=n_centroids,
         iters=iters,
-        cache_key=cache_key,
     )
     return ivf_probe(
         idx.indexed,

@@ -44,11 +44,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from stupidb_spark.operators.similarity import (
     SPREAD_BYTES_PER_TASK,
     collect_query_matrix,
+    no_neighbors,
+    rank_topk,
     spread_small_scan,
 )
 
@@ -163,7 +164,11 @@ def pq_topk(
     Returns: query_id, neighbor_id, pq_score, rk (≤ k rows per query).
     """
     m, kc, dsub = codebooks.shape
+    id_type = dict(codes.dtypes)["neighbor_id"]
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
+    if not len(q_ids):
+        return no_neighbors(codes, out_schema, "pq_score", k)
     qnorms = np.linalg.norm(Q, axis=1)
     qnorms[qnorms == 0] = 1.0
     # luts[j, s, c] = <query_j subspace s, centroid c>
@@ -172,9 +177,6 @@ def pq_topk(
     )
     # reconstructed-norm contribution per (s, c): ||centroid||^2
     cent_sq = (codebooks**2).sum(axis=2)  # (m, kc)
-
-    id_type = dict(codes.dtypes)["neighbor_id"]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
 
     def score(batches):
         for pdf in batches:
@@ -207,20 +209,7 @@ def pq_topk(
                 yield pd.concat(frames, ignore_index=True)
 
     partials = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rk")
-    )
-
-
-# Memoized (codebooks, persisted code table) per base table — the in-session
-# stand-in for the written-out code table a deployment probes repeatedly
-# (same contract as operators/ivf.py::_INDEX_CACHE).
-_PQ_CACHE: dict[tuple, tuple[np.ndarray, DataFrame]] = {}
+    return rank_topk(partials, "pq_score", k)
 
 
 def pq_search(
@@ -232,20 +221,11 @@ def pq_search(
     k: int = 10,
     m: int = 16,
     n_centroids: int = 256,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """One-shot train + encode + ADC top-k (the composed form; a deployment
-    trains/encodes once and calls :func:`pq_topk` per query batch).
-    ``cache_key`` (e.g. the source path) memoizes the trained codebooks and
-    the persisted code table; None disables memoization."""
-    key = (cache_key, id_col, vec_col, m, n_centroids)
-    if cache_key is not None and key in _PQ_CACHE:
-        books, codes = _PQ_CACHE[key]
-    else:
-        books = pq_train(base, id_col=id_col, vec_col=vec_col, m=m, k=n_centroids)
-        codes = pq_encode(base, books, id_col=id_col, vec_col=vec_col).persist()
-        if cache_key is not None:
-            _PQ_CACHE[key] = (books, codes)
+    trains/encodes once and calls :func:`pq_topk` per query batch)."""
+    books = pq_train(base, id_col=id_col, vec_col=vec_col, m=m, k=n_centroids)
+    codes = pq_encode(base, books, id_col=id_col, vec_col=vec_col)
     return pq_topk(codes, books, queries, id_col=id_col, vec_col=vec_col, k=k)
 
 
@@ -254,8 +234,6 @@ def pq_search(
 # The stored table is (id, cell, code): 1 int + m uint8 per vector; a query
 # scans only its probed cells' partitions and never touches a float vector.
 # ---------------------------------------------------------------------------
-
-_IVFPQ_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray, DataFrame]] = {}
 
 
 def ivfpq_build(
@@ -266,27 +244,17 @@ def ivfpq_build(
     n_cells: int = 16,
     m: int = 16,
     k_codes: int = 256,
-    cache_key: str | None = None,
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     """Train both quantizers (coarse cells + PQ codebooks, each on a bounded
     driver-side sample) and produce the (id, cell, code) table in ONE
     map-only pass — cell assignment and subspace encoding share the same
-    Arrow batch. Returns (cell_centroids, codebooks, table); memoized and
-    persisted per ``cache_key`` like the IVF and PQ caches."""
+    Arrow batch. Returns (cell_centroids, codebooks, table)."""
     from stupidb_spark.operators.ivf import ivf_train
 
-    key = (cache_key, id_col, vec_col, n_cells, m, k_codes)
-    if cache_key is not None and key in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[key]
     centroids = ivf_train(base, id_col=id_col, vec_col=vec_col, k=n_cells)
     books = pq_train(base, id_col=id_col, vec_col=vec_col, m=m, k=k_codes)
-    table = ivfpq_encode(
-        base, centroids, books, id_col=id_col, vec_col=vec_col
-    ).persist()
-    built = (centroids, books, table)
-    if cache_key is not None:
-        _IVFPQ_CACHE[key] = built
-    return built
+    table = ivfpq_encode(base, centroids, books, id_col=id_col, vec_col=vec_col)
+    return centroids, books, table
 
 
 def ivfpq_encode(
@@ -369,7 +337,6 @@ def ivfpq_topk(
     n_probe: int = 6,
     m: int = 16,
     k_codes: int = 256,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """IVF-PQ top-k: statically prune to the query set's probed cells, then
     ADC-score codes with the per-query cell-membership mask — the IVF probe
@@ -377,6 +344,11 @@ def ivfpq_topk(
     compounds both approximations; pinned in tests."""
     from stupidb_spark.operators.ivf import _probe_cells
 
+    id_type = dict(base.dtypes)[id_col]
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
+    q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
+    if not len(q_ids):
+        return no_neighbors(base, out_schema, "pq_score", k)
     centroids, books, table = ivfpq_build(
         base,
         id_col=id_col,
@@ -384,10 +356,8 @@ def ivfpq_topk(
         n_cells=n_cells,
         m=m,
         k_codes=k_codes,
-        cache_key=cache_key,
     )
     mm, kk, dsub = books.shape
-    q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     cells = _probe_cells(Q, centroids, n_probe)
     probe_mask = np.zeros((len(q_ids), len(centroids)), dtype=bool)
     for j, row in enumerate(cells):
@@ -396,9 +366,6 @@ def ivfpq_topk(
     qnorms[qnorms == 0] = 1.0
     luts = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), mm, dsub), books)
     cent_sq = (books**2).sum(axis=2)
-
-    id_type = dict(table.dtypes)["neighbor_id"]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
 
     def score(batches):
         sub_idx = np.arange(mm)
@@ -435,11 +402,4 @@ def ivfpq_topk(
     partials = table.filter(F.col("cell").isin(probed)).mapInPandas(
         score, out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rk")
-    )
+    return rank_topk(partials, "pq_score", k)

@@ -132,14 +132,40 @@ def collect_query_matrix(
     """Driver-side (ids, matrix) of a SMALL query set — the batch-retrieval
     contract: the query side of an ANN lookup is the broadcastable side, and
     collecting it is the same data movement as broadcasting it. Sorted by id
-    for determinism."""
-    rows = queries.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).collect()
+    for determinism. A NULL query vector matches nothing, so its row is
+    skipped; with no rows left ``ids`` is empty and the caller returns an
+    empty result (:func:`no_neighbors`)."""
+    rows = (
+        queries.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .collect()
+    )
     rows.sort(key=lambda r: r._id)
     ids = np.array([r._id for r in rows])
-    Q = np.stack([np.array(r._v, dtype=np.float64) for r in rows])
+    Q = np.array([r._v for r in rows], dtype=np.float64)
     return ids, Q
+
+
+def rank_topk(partials: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Merge per-batch candidates into the k best per query, ranked by
+    (score desc, neighbor_id) for a deterministic total order. Any row in a
+    query's global top-k is in its batch's top-k, so the merge is exact."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id")
+    )
+    return (
+        partials.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", score_col, "rk")
+    )
+
+
+def no_neighbors(
+    df: DataFrame, out_schema: str, score_col: str, k: int
+) -> DataFrame:
+    """The result of a search with no (non-NULL) query vectors: empty, with
+    the same schema a non-empty search returns, and no scan of the base."""
+    return rank_topk(df.sparkSession.createDataFrame([], out_schema), score_col, k)
 
 
 def _quant_sims(B: np.ndarray, Q: np.ndarray, qnorms: np.ndarray) -> np.ndarray:
@@ -188,12 +214,12 @@ def brute_force_topk(
     Returns: query_id, neighbor_id, cosine_sim — k rows per query, ranked by
     (sim desc, neighbor_id) for a deterministic total order.
     """
-    q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
     id_type = dict(base.dtypes)[id_col]
-    out_schema = (
-        f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
-    )
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
+    q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
+    if not len(q_ids):
+        return no_neighbors(base, out_schema, "cosine_sim", k)
+    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
 
     def score(batches):
         for pdf in batches:
@@ -229,14 +255,7 @@ def brute_force_topk(
         bytes_per_task=SPREAD_BYTES_PER_TASK,
     )
     partials = b.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rk")
-    )
+    return rank_topk(partials, "cosine_sim", k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -287,7 +306,11 @@ def lsh_topk(
     bucket-equi-join formulation shipped a vector array per candidate and
     ran a dedup + join + window pipeline — measured ~2.5× slower at sf0.1.)
     """
+    id_type = dict(base.dtypes)[id_col]
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
+    if not len(q_ids):
+        return no_neighbors(base, out_schema, "cosine_sim", k)
     qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
 
     planes_rows = []
@@ -301,8 +324,6 @@ def lsh_topk(
         return (signs * bit_weights).reshape(len(M), n_tables, n_planes).sum(axis=2)
 
     q_buckets = buckets_of(Q)  # (nq, n_tables)
-    id_type = dict(base.dtypes)[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
 
     def score(batches):
         for pdf in batches:
@@ -336,14 +357,7 @@ def lsh_topk(
         bytes_per_task=SPREAD_BYTES_PER_TASK,
     )
     partials = b.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rk")
-    )
+    return rank_topk(partials, "cosine_sim", k)
 
 
 def norm_guard(df: DataFrame, what: str) -> DataFrame:

@@ -70,17 +70,13 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("ann_topk_ivf")  # approximate + iterative (k-means) — no SQL oracle;
 # recall vs brute force pinned in tests/test_similarity.py
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF-Flat probe against a prebuilt (memoized per sf_dir) index — train/
-    # index/probe are split so the quantizer is fitted once, never inside
-    # the query; repeated calls go straight to cell-local probing.
+    # IVF-Flat: a sample-trained quantizer, one map-only cell assignment,
+    # then a probe that scores only the query set's nearest cells.
     from stupidb_spark.operators.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = ivf_topk(
-        emb, queries, id_col="vec_id", vec_col="embedding", k=10,
-        cache_key=f"{sf_dir}/embeddings",
-    )
+    out = ivf_topk(emb, queries, id_col="vec_id", vec_col="embedding", k=10)
     return out.select(
         "query_id", "neighbor_id", X.dround("cosine_sim").alias("cosine_sim"), "rk"
     )
@@ -97,10 +93,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = pq_search(
-        emb, queries, id_col="vec_id", vec_col="embedding", k=10,
-        cache_key=f"{sf_dir}/embeddings",
-    )
+    out = pq_search(emb, queries, id_col="vec_id", vec_col="embedding", k=10)
     return out.select(
         "query_id", "neighbor_id", X.dround("pq_score").alias("pq_score"), "rk"
     )
@@ -116,10 +109,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = ivfpq_topk(
-        emb, queries, id_col="vec_id", vec_col="embedding", k=10,
-        cache_key=f"{sf_dir}/embeddings",
-    )
+    out = ivfpq_topk(emb, queries, id_col="vec_id", vec_col="embedding", k=10)
     return out.select(
         "query_id", "neighbor_id", X.dround("pq_score").alias("pq_score"), "rk"
     )
@@ -181,16 +171,19 @@ def ann_ivf_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-rebalance per-cell population is reported — the monitor table an
     # operator watches. Cold cells keep their ids (stable output), split
     # cells shrink, new sub-cell ids appear at the end.
+    from dataclasses import replace
+
     from stupidb_spark.operators.ivf import (
         build_ivf_index,
         ivf_append,
         ivf_cell_stats,
         ivf_rebalance,
     )
+    from stupidb_spark.operators.lineage import cut_lineage
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
-    idx = build_ivf_index(emb, cache_key=f"{sf_dir}/embeddings")
+    idx = build_ivf_index(emb)
     k = len(idx.centroids)
     seed = emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
     seed_lit = F.array(*[F.lit(float(x)) for x in seed])
@@ -204,6 +197,10 @@ def ann_ivf_rebalance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         jitter.cast("array<float>").alias("embedding"),
     )
     appended = ivf_append(idx, skew)
+    # ivf_rebalance reads the appended index in several jobs (cell counts,
+    # one sample per hot cell, the reassignment): cut it once so the base
+    # assignment and the skew batch are computed once, not per job.
+    appended = replace(appended, indexed=cut_lineage(appended.indexed, eager=False))
     res = ivf_rebalance(appended, max_ratio=3.0, target_ratio=2.0)
     return ivf_cell_stats(res.index.indexed).select("cell", "n")
 

@@ -239,41 +239,6 @@ def test_cpu_calibration_deterministic_workload_and_positive():
     assert max(a, b) / min(a, b) < 5.0
 
 
-def test_clear_ann_caches_empties_and_unpersists():
-    # Every bench sample must compute from the parquet inputs: the round-14
-    # verdict flagged min-of-N samples scoring warm memoized ANN indexes.
-    # Duck-typed fakes — the helper only touches .indexed / tuple slots.
-    from types import SimpleNamespace
-    from unittest.mock import MagicMock
-
-    from stupidb_spark.operators import clear_ann_caches
-    from stupidb_spark.operators import ivf as _ivf
-    from stupidb_spark.operators import pq as _pq
-
-    idx_df, pq_df, ivfpq_df = MagicMock(), MagicMock(), MagicMock()
-    _ivf._INDEX_CACHE["k1"] = SimpleNamespace(indexed=idx_df)
-    _pq._PQ_CACHE["k2"] = ("books", pq_df)
-    _pq._IVFPQ_CACHE["k3"] = ("cents", "books", ivfpq_df)
-    # an entry whose unpersist raises must still be dropped
-    dead = MagicMock()
-    dead.unpersist.side_effect = RuntimeError("session gone")
-    _ivf._INDEX_CACHE["k4"] = SimpleNamespace(indexed=dead)
-    try:
-        clear_ann_caches()
-    finally:
-        leftovers = (
-            len(_ivf._INDEX_CACHE) + len(_pq._PQ_CACHE) + len(_pq._IVFPQ_CACHE)
-        )
-        _ivf._INDEX_CACHE.clear()
-        _pq._PQ_CACHE.clear()
-        _pq._IVFPQ_CACHE.clear()
-    assert leftovers == 0
-    idx_df.unpersist.assert_called_once()
-    pq_df.unpersist.assert_called_once()
-    ivfpq_df.unpersist.assert_called_once()
-    dead.unpersist.assert_called_once()
-
-
 def test_bench_summary_line_carries_queries_and_fits_tail_capture():
     # The driver parses the LAST stdout line; it must contain the per-query
     # map (round-14 PERF had per_query={}) and stay under the ~3 KB tail

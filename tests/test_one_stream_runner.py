@@ -1,11 +1,13 @@
 """Source guard (pure Python, no Spark): every stream in the package starts
 through ``streaming/events.py::run_stream``, no code builds a per-call
-session whose conf and listeners outlive the query, and every session is
-built by ``session.get_session``."""
+session whose conf and listeners outlive the query, every session is
+built by ``session.get_session``, and no module memoizes relations across
+calls."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -15,6 +17,8 @@ GATE_CHECK = ROOT / "scripts" / "gate_check.py"
 # Split so a plain-text search of the repo for the call finds only code.
 NEW_SESSION = "new" + "Session("
 BUILDER = "SparkSession" + ".builder"
+PERSISTS = (".per" + "sist(", ".ca" + "che()", "unper" + "sist")
+MODULE_CACHE = re.compile(r"_\w*CA" + "CHE")
 
 
 def test_write_stream_only_inside_run_stream():
@@ -66,3 +70,31 @@ def test_one_session_bootstrap():
                 offenders.append(f"{path.relative_to(ROOT)}:{lineno}")
     assert offenders == []
     assert BUILDER in (PKG / "session.py").read_text()
+
+
+def _module_level_names(path: Path) -> list[str]:
+    names: list[str] = []
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign):
+            names += [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.append(node.target.id)
+    return names
+
+
+def test_no_memoized_relations():
+    """A relation is a plan recomputed from its inputs: no module-level
+    ``_*CACHE`` holds results across calls, and nothing pins blocks whose
+    release would need an owner (lineage cuts go through
+    ``operators/lineage.py::cut_lineage``)."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(ROOT)
+        offenders += [
+            f"{rel}: {name}"
+            for name in _module_level_names(path)
+            if MODULE_CACHE.fullmatch(name)
+        ]
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            offenders += [f"{rel}:{lineno}: {p}" for p in PERSISTS if p in line]
+    assert offenders == []

@@ -259,11 +259,9 @@ EXCHANGE_BUDGETS = {
     "agg_pivot_unpivot": 2,
     # JSON extraction fuses into the scan; user_id window is the one shuffle
     "events_props_running": 1,
-    # spread + ids-only ADC partial-topk merge; the memoized code table's
-    # materialized repartition surfaces as a 3rd exchange inside the
-    # InMemoryRelation subtree once another test has warmed the cache
-    "ann_topk_pq": 3,
-    "ann_topk_ivfpq": 3,
+    # spread + ids-only ADC partial-topk merge
+    "ann_topk_pq": 2,
+    "ann_topk_ivfpq": 2,
     # posexplode fuses into the scan; the (label, dim) agg is the one shuffle
     "emb_label_centroids": 1,
     # the custkey window is the only exchange; frame list stays in-operator

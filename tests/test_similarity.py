@@ -3,6 +3,8 @@ ground truth, ordering invariants, and near-dup blocking correctness."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.similarity import (
@@ -146,7 +148,7 @@ def test_ivf_probe_collects_queries_once(spark, monkeypatch):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    idx = ivf_mod.build_ivf_index(emb, n_centroids=8, cache_key=None)
+    idx = ivf_mod.build_ivf_index(emb, n_centroids=8)
     calls["n"] = 0
     out = ivf_mod.ivf_probe(idx.indexed, idx.centroids, queries, k=5, n_probe=4)
     assert out.count() > 0
@@ -406,8 +408,8 @@ def test_ivfpq_append_matches_all_at_once_encode(spark):
     )
     assert appended[2].count() == n
 
-    # the public ivfpq_topk path is cache-keyed on build params, so compare
-    # the appended TABLE against the all-at-once TABLE directly: the same
+    # the public ivfpq_topk path retrains on its input, so compare the
+    # appended TABLE against the all-at-once TABLE directly: the same
     # frozen quantizers must encode the delta identically either way, which
     # makes every downstream search result identical by construction
     a = sorted(map(tuple, appended[2].orderBy("neighbor_id").collect()))
@@ -432,7 +434,7 @@ def test_ivf_rebalance_splits_hot_cells(spark):
     emb = _emb(spark)
     n = emb.count()
     queries = emb.filter(F.col("vec_id") < 5)
-    idx = build_ivf_index(emb, cache_key=None)
+    idx = build_ivf_index(emb)
 
     # skewed append: a heterogeneous CLOUD around one existing vector piles
     # into few cells of the frozen quantizer — drifted-but-splittable, the
@@ -570,7 +572,7 @@ def test_durable_rebalance_emptied_parent_leaves_no_stale_partition(spark):
 
     from stupidb_spark.operators import ivf as ivf_mod
     from stupidb_spark.operators.ivf import (
-        _CachedIndex,
+        IvfIndex,
         RebalanceResult,
         build_ivf_index,
         load_ivf_index,
@@ -579,7 +581,7 @@ def test_durable_rebalance_emptied_parent_leaves_no_stale_partition(spark):
     )
 
     emb = _emb(spark)
-    idx = build_ivf_index(emb, cache_key=None)
+    idx = build_ivf_index(emb)
     k_old = len(idx.centroids)
     # a parent cell that actually has rows
     parent = idx.indexed.groupBy("cell").count().orderBy(
@@ -602,7 +604,7 @@ def test_durable_rebalance_emptied_parent_leaves_no_stale_partition(spark):
             )
             cents = np.vstack([ix.centroids, ix.centroids[parent]])
             return RebalanceResult(
-                _CachedIndex(centroids=cents, indexed=moved),
+                IvfIndex(centroids=cents, indexed=moved),
                 {parent: [parent, k_old]},
             )
 
@@ -645,7 +647,7 @@ def test_ivf_rebalance_durable_rewrites_only_hot_partitions(spark):
     emb = _emb(spark)
     n = emb.count()
     queries = emb.filter(F.col("vec_id") < 5)
-    idx = build_ivf_index(emb, cache_key=None)
+    idx = build_ivf_index(emb)
     seed = emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
     dim = len(seed)
     skew = spark.createDataFrame(
@@ -744,7 +746,7 @@ def test_check_ivf_index_detects_crash_window_damage(spark):
     )
 
     emb = _emb(spark)
-    idx = build_ivf_index(emb, cache_key=None)
+    idx = build_ivf_index(emb)
     path = f"/root/repo/.scratch/ivfchk-{uuid.uuid4().hex[:8]}"
     try:
         save_ivf_index(idx, path)
@@ -846,3 +848,81 @@ def test_quant_sims_float64_sum_bit_identical_to_int64():
         ).astype(np.float64) / QUANT_SCALE
         want[:, j] = d / (bnorms * qnorms[j])
     assert got.tobytes() == want.tobytes()
+
+
+@pytest.mark.parametrize("name", ["ann_topk_ivf", "ann_topk_pq", "ann_topk_ivfpq"])
+def test_ann_query_reads_current_data(spark, tmp_path, name):
+    """A registered ANN query trains from the data it reads: after the
+    embeddings file is rewritten, the same query over the same path must
+    give what a fresh directory holding the new data gives, not the answer
+    of an index built from the old file."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stupidb_spark.queryset import QUERIES
+
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    n = table.num_rows
+    ids = table.column("vec_id").to_numpy()
+    rotated = table.set_column(
+        table.schema.get_field_index("vec_id"),
+        "vec_id",
+        pa.array((ids + n // 2) % n, pa.int64()),
+    )
+    live, fresh = tmp_path / "live", tmp_path / "fresh"
+    live.mkdir()
+    fresh.mkdir()
+
+    def run(sf_dir):
+        return sorted(QUERIES[name](spark, str(sf_dir)).collect())
+
+    pq.write_table(table, live / "embeddings.parquet")
+    before = run(live)
+    pq.write_table(rotated, live / "embeddings.parquet")
+    pq.write_table(rotated, fresh / "embeddings.parquet")
+    after = run(live)
+    assert after == run(fresh)
+    assert after != before
+
+
+def _ann_search(op, emb):
+    """ANN operator ``op`` as ``queries -> result`` over ``emb``, with any
+    index or codebook it probes built once up front."""
+    from stupidb_spark.operators.ivf import build_ivf_index, ivf_probe
+    from stupidb_spark.operators.pq import ivfpq_topk, pq_encode, pq_topk, pq_train
+
+    if op == "ivf_probe":
+        idx = build_ivf_index(emb)
+        return lambda q: ivf_probe(idx.indexed, idx.centroids, q, k=5)
+    if op == "pq_topk":
+        books = pq_train(emb)
+        codes = pq_encode(emb, books)
+        return lambda q: pq_topk(codes, books, q, k=5)
+    fn = {
+        "brute_force_topk": brute_force_topk,
+        "lsh_topk": lsh_topk,
+        "ivfpq_topk": ivfpq_topk,
+    }[op]
+    return lambda q: fn(emb, q, k=5)
+
+
+@pytest.mark.parametrize(
+    "op", ["brute_force_topk", "lsh_topk", "ivf_probe", "pq_topk", "ivfpq_topk"]
+)
+def test_ann_operators_skip_null_and_empty_query_sets(spark, op):
+    """SQL semantics for the query side: a NULL query vector matches
+    nothing (its row is skipped), and zero queries give an empty frame with
+    the operator's output schema; neither raises."""
+    emb = _emb(spark).select("vec_id", "embedding")
+    search = _ann_search(op, emb)
+    queries = emb.filter(F.col("vec_id") < 3)
+    expected = search(queries)
+    null_query = spark.createDataFrame([(10_000, None)], emb.schema)
+    with_null = search(queries.unionByName(null_query))
+    assert sorted(with_null.collect()) == sorted(expected.collect())
+
+    for no_queries in (queries.limit(0), null_query):
+        empty = search(no_queries)
+        assert empty.schema == expected.schema
+        assert empty.collect() == []
