@@ -8,11 +8,11 @@ shuffles, and it shuffles *buckets*, never the O(n²) pair space.
 
 Scale design:
 - Exact dedup = hash groupBy on the fingerprint → one shuffle keyed evenly.
-- MinHash LSH: signature is computed per-row (narrow); candidate generation
+- MinHash LSH: signature is a per-doc hash aggregate; candidate generation
   explodes to n_bands rows per doc and self-joins per (band, band_hash)
   bucket — at 100 TB the join key space is wide, buckets are small, and AQE
-  handles the occasional hot bucket. Verification joins shingle sets back
-  only for candidates.
+  handles the occasional hot bucket. Verification joins one shingle set per
+  document onto the candidates only.
 - SimHash: 64-bit signature per row (narrow fold), banded the same way.
 - Embedding near-dup: blocked (label/LSH bucket) pairwise cosine so the
   cross product never materializes globally.
@@ -91,8 +91,10 @@ def _doc_bytes_guard(
     if cap is None:
         return df
     nb = F.octet_length(F.col(text_col))
+    # A NULL text has no tokens (it shingles to nothing), so it passes:
+    # ``NULL <= cap`` alone is NULL, which assert_true treats as a failure.
     ok = F.assert_true(
-        nb <= F.lit(cap),
+        nb.isNull() | (nb <= F.lit(cap)),
         F.concat(
             F.lit(f"{what}: document "),
             F.col("doc").cast("string"),
@@ -566,70 +568,33 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified with exact Jaccard.
 
-    shingle → 32-hash signature → 8 bands of 4 → band-bucket self-join for
-    candidates → exact-Jaccard verification of candidates only. With r=4,
-    b=8 the S-curve crosses ~(1/8)^(1/4) ≈ 0.59, a good match for a 0.5
-    verification threshold.
+    Filter through the band index, then verify only the candidates, each on
+    compact per-document data (the index-filter / candidate-verify shape of
+    distributed similarity joins): the :func:`minhash_band_index`
+    construction (32-hash signature → 8 bands of 4) feeds a bucket
+    self-join whose distinct ``(id_a, id_b)`` pairs are the candidates;
+    each candidate then meets ONE row per document — its distinct shingle
+    strings — and scores ``|A∩B| / (|A|+|B|-|A∩B|)`` with
+    ``array_intersect``. Strings, not shingle hashes, so the score is exact
+    by construction. With r=4, b=8 the S-curve crosses ~(1/8)^(1/4) ≈
+    0.59, a good match for a 0.5 verification threshold.
+
+    Every join side — bands, candidates, shingle sets — is corpus- or
+    output-sized, so each is pinned to :func:`corpus_join_strategy`:
+    Catalyst's post-explode/post-aggregate estimates sat under the
+    auto-broadcast threshold at 500k docs and planned fatal
+    BroadcastHashJoins (the 100× probe, SCALE.md).
 
     Returns: id_a, id_b, jaccard (exact, post-verification).
     """
-    rows_per_band = n_hashes // n_bands
-    # Exploded (doc, shingle) rows — see doc_shingles for why not arrays
-    # and for the mega-document guard (max_doc_bytes) that bounds the
-    # per-doc window partitions here and in the n_sh counts below.
+    # Derived once; both the bands and the shingle sets read it. NOT
+    # checkpointed: AQE exchange reuse shares the per-doc shuffle between
+    # its consumers at run time (an eager localCheckpoint here measured
+    # ~2× the warm query).
     ex = doc_shingles(
         df, id_col=id_col, text_col=text_col, k=k, max_doc_bytes=max_doc_bytes
     )
-
-    # Signature via hash-agg min over the exploded rows: every expression
-    # stays inside whole-stage codegen with map-side partial aggregation.
-    # NOT checkpointed: AQE exchange reuse already shares this aggregation
-    # between both band self-join sides (measured: an eager localCheckpoint
-    # here costs ~2× the warm query).
-    #
-    # n_sh rides the SAME aggregation for free: ex rows are distinct
-    # (doc, shingle) by doc_shingles' contract, so count(*) per doc IS the
-    # per-doc shingle count the verification denominator needs. The r14
-    # form recomputed it as a whole-partition window over the gram-scale
-    # exploded rows — a full extra columnar pass plus 8 wider bytes on
-    # every gram row through both verification join sides (r15 profile:
-    # the windowed relation exchanged 5.8 MB vs the 3.4 MB raw rows).
-    # Carrying the count on the doc-scale band rows instead costs 8 bytes
-    # per (doc, band) row.
-    sig = ex.groupBy("doc").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-        F.count(F.lit(1)).alias("n_sh"),
-    )
-
-    # Bands carry ONLY (doc, band-bucket, n_sh) longs — the shingle arrays
-    # would otherwise be duplicated ×n_bands through the shuffle and
-    # dominate the join payload; verification joins them back for
-    # candidates only.
-    bands = sig.select(
-        "doc",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col(f"h{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
-
-    # The band relation is CORPUS-sized (n_bands rows per doc) — the
-    # bucket self-join must never build a broadcast side, whatever the
-    # static estimate says (see the verification-join comment below).
+    bands = _minhash_bands(ex, n_hashes, n_bands)
     a = bands.alias("a").hint(corpus_join_strategy())
     b = bands.alias("b").hint(corpus_join_strategy())
     candidates = (
@@ -637,60 +602,55 @@ def minhash_lsh_pairs(
             b,
             (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.doc") < F.col("b.doc")),
         )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            # per-doc sizes ride the candidate pair from the band rows —
-            # functionally dependent on the ids, so the pair dedup keeps
-            # identical values whichever duplicate row survives
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
+        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
-        # candidates are OUTPUT-sized (quadratic in bucket occupancy on a
-        # homogeneous corpus) — forbid broadcasting this side of the
-        # verification joins too; self-join output estimates are exactly
-        # the kind Catalyst gets wrong
         .hint(corpus_join_strategy())
     )
-    # Exact-Jaccard verification of candidates only, via common-shingle
-    # counts on the exploded rows (pairs with zero common shingles drop out
-    # of the join — their jaccard is 0, below any threshold).
-    #
-    # Every verification side below is O(corpus) — one-to-many shingle rows
-    # per document — so none of them may EVER be broadcast. Catalyst's
-    # post-explode size estimate says otherwise: at factor 100 (500k docs,
-    # 26M shingle rows) the estimate still sat under the 64 MB
-    # auto-broadcast threshold and the planned BroadcastHashJoin died
-    # building a >256 MB hashed relation (the 100× probe caught it;
-    # sf0.1–30× masked it because the broadcast genuinely fit).
-    # shuffle_hash pins the scale-safe strategy: shuffled on the join key
-    # like SMJ, but builds a per-partition hash table instead of sorting
-    # 26M+ rows. The per-doc sizes arrive ON the candidate pair (from the
-    # band rows, see above) and flow through the pair groupBy as min() —
-    # no separate n_sh relation, no join-back, and since r15 no gram-scale
-    # window pass either: the join sides are the raw exploded rows.
-    exv = ex.hint(corpus_join_strategy())
-    joined = (
-        candidates.join(
-            exv.select(F.col("doc").alias("id_a"), "shingle"),
-            "id_a",
-        )
-        .join(
-            exv.select(F.col("doc").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.min("n_a").alias("n_a"),
-            F.min("n_b").alias("n_b"),
-        )
+    # ex rows are distinct (doc, shingle) by doc_shingles' contract, so the
+    # set's size is the document's shingle count.
+    sets = (
+        ex.groupBy("doc")
+        .agg(F.collect_set("shingle").alias("sh"))
+        .hint(corpus_join_strategy())
     )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    joined = candidates.join(
+        sets.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+    ).join(sets.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = n_common / (F.size("sh_a") + F.size("sh_b") - n_common)
     return joined.select(
         "id_a", "id_b", jac.alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
+
+
+def _band_buckets(sig: list[Column], n_bands: int) -> Column:
+    """LSH band buckets of a MinHash signature, exploded one row per band:
+    ``xxhash64(b, band b's rows)`` over ``n_bands`` slices of
+    ``len(sig) // n_bands`` rows. The one bucket formula, shared by the
+    batch index (signature columns) and the streaming probe (array
+    elements)."""
+    r = len(sig) // n_bands
+    return F.explode(
+        F.array(
+            *[F.xxhash64(F.lit(b), *sig[b * r : (b + 1) * r]) for b in range(n_bands)]
+        )
+    )
+
+
+def _minhash_bands(ex: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """``(doc, bucket)`` band rows from exploded distinct ``(doc, shingle)``
+    rows: the per-permutation ``min(xxhash64(i, shingle))`` signature as a
+    hash aggregate (map-side partials, whole-stage codegen), then
+    :func:`_band_buckets`. Bit-identical to the array-fold
+    :func:`minhash_signature` the probe uses."""
+    sig = ex.groupBy("doc").agg(
+        *[
+            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
+            for i in range(n_hashes)
+        ]
+    )
+    h = [F.col(f"h{i}") for i in range(n_hashes)]
+    return sig.select("doc", _band_buckets(h, n_bands).alias("bucket"))
 
 
 def simhash64(c: Column) -> Column:
@@ -968,43 +928,19 @@ def minhash_band_index(
     n_bands: int = 8,
     max_doc_bytes: int | None = DOC_BYTES_CAP,
 ) -> DataFrame:
-    """``(doc, bucket)`` MinHash band index over a document corpus — the
-    STATIC side of ingest-time dedup (:func:`minhash_probe_candidates`).
+    """``(doc, bucket)`` MinHash band index over a document corpus: the
+    candidate filter of :func:`minhash_lsh_pairs` and the STATIC side of
+    ingest-time dedup (:func:`minhash_probe_candidates`).
 
-    Identical hash construction to :func:`minhash_lsh_pairs` (per-band
-    xxhash64 over the band's signature rows), built the scale way: exploded
-    shingle rows → hash-agg signature (map-side partials, whole-stage
-    codegen), n_bands rows per doc. Persist it partitioned/bucketed by
-    ``bucket`` at scale so every ingest batch probes without reshuffling
-    the corpus.
+    Built the scale way: exploded shingle rows (:func:`doc_shingles`) →
+    hash-agg signature → n_bands rows per doc. Persist it
+    partitioned/bucketed by ``bucket`` at scale so every ingest batch
+    probes without reshuffling the corpus.
     """
-    rows_per_band = n_hashes // n_bands
     ex = doc_shingles(
         df, id_col=id_col, text_col=text_col, k=k, max_doc_bytes=max_doc_bytes
     )
-    sig = ex.groupBy("doc").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    return sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col(f"h{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
+    return _minhash_bands(ex, n_hashes, n_bands)
 
 
 def minhash_probe_candidates(
@@ -1039,7 +975,6 @@ def minhash_probe_candidates(
     caught; near-dups follow the usual LSH S-curve. Returns distinct
     ``(probe_id, corpus_doc)``, self-matches excluded.
     """
-    rows_per_band = n_hashes // n_bands
     base = probe.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
     )
@@ -1052,21 +987,10 @@ def minhash_probe_candidates(
         .where(F.size("__sh") >= 1)
         .withColumn("__sig", minhash_signature(F.col("__sh"), n_hashes))
     )
-    buckets = F.explode(
-        F.array(
-            *[
-                F.xxhash64(
-                    F.lit(b),
-                    *[
-                        F.element_at("__sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-                for b in range(n_bands)
-            ]
-        )
+    sig = [F.element_at("__sig", i + 1) for i in range(n_hashes)]
+    probed = base.select(
+        F.col("doc").alias("probe_id"), _band_buckets(sig, n_bands).alias("bucket")
     )
-    probed = base.select(F.col("doc").alias("probe_id"), buckets.alias("bucket"))
     # Stream-static (or batch) bucket join: the index is corpus-sized —
     # strategy-pinned, never estimate-broadcast.
     return (

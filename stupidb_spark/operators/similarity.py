@@ -132,11 +132,12 @@ def collect_query_matrix(
     """Driver-side (ids, matrix) of a SMALL query set — the batch-retrieval
     contract: the query side of an ANN lookup is the broadcastable side, and
     collecting it is the same data movement as broadcasting it. Sorted by id
-    for determinism. A NULL query vector matches nothing, so its row is
-    skipped; with no rows left ``ids`` is empty and the caller returns an
-    empty result (:func:`no_neighbors`)."""
+    for determinism. A query with a NULL id or a NULL vector has no key to
+    match on, so it matches nothing and its row is skipped; with no rows
+    left ``ids`` is empty and the caller returns an empty result
+    (:func:`no_neighbors`)."""
     rows = (
-        queries.filter(F.col(vec_col).isNotNull())
+        queries.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .collect()
     )

@@ -3,14 +3,13 @@
 The reference has no optimizer at all (`stupidb/core.py:3-5` aspires to one;
 SURVEY.md §4.1: none exists) — here Catalyst does the optimizing, and this
 package makes its decisions *observable and testable*: predicate pushdown,
-column pruning, join strategy, top-k fusion, and whole-stage codegen coverage
-are asserted in tests/test_plans.py so a regression that would only hurt at
+column pruning, join strategy, top-k fusion and exchange counts are
+asserted in tests/test_plans.py so a regression that would only hurt at
 100 TB (a lost pushdown, a broadcast that became a shuffle) fails CI at
 sf0.001.
 """
 
 from stupidb_spark.plans.audit import (
-    codegen_stage_count,
     exchange_count,
     executed_final_plan,
     formatted_plan,
@@ -26,5 +25,4 @@ __all__ = [
     "has_node",
     "exchange_count",
     "executed_final_plan",
-    "codegen_stage_count",
 ]

@@ -63,8 +63,3 @@ def executed_final_plan(df: DataFrame) -> str:
     # drop the "== Initial Plan ==" tail AQE appends after the final plan
     return plan.split("== Initial Plan ==")[0]
 
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans (wider spans = fewer, bigger)."""
-    ids = set(re.findall(r"codegen id : (\d+)", formatted_plan(df)))
-    return len(ids)

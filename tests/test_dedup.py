@@ -6,12 +6,15 @@ implementation of the fingerprint."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stupidb_spark.functions.text import words
 from stupidb_spark.operators.dedup import (
     jaccard_pairs,
+    minhash_band_index,
     minhash_lsh_pairs,
+    minhash_probe_candidates,
     simhash64,
     simhash_fingerprints,
     simhash_pairs,
@@ -26,25 +29,66 @@ def _docs(spark):
     return load_table(spark, SF_DIR, "documents")
 
 
+def _edge_docs(spark):
+    """Shingling edge cases beside two near-duplicate pairs: an empty text,
+    a text under k words, a doc_id on two rows (identical text, so its
+    interleaved tokens shingle deterministically), a NULL doc_id and a
+    NULL text."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    colors = "red green blue cyan pink gray"
+    return spark.createDataFrame(
+        [
+            (1, base),
+            (2, base + " today"),
+            (3, ""),
+            (4, "two words"),
+            (5, colors),
+            (5, colors),
+            (6, " ".join(w for w in colors.split() for _ in range(2))),
+            (None, base),
+            (7, None),
+        ],
+        "doc_id long, text string",
+    )
+
+
 def test_minhash_recovers_exact_jaccard_pairs(spark):
-    docs = _docs(spark)
-    exact = {
-        (r.id_a, r.id_b)
-        for r in jaccard_pairs(
-            docs, id_col="doc_id", text_col="text", threshold=0.5,
-            uncapped_ok=True,
-        ).collect()
-    }
-    approx = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            docs, id_col="doc_id", text_col="text", threshold=0.5
-        ).collect()
-    }
-    # verification filters candidates with exact jaccard ⇒ no false positives;
-    # fixture dups are near-identical ⇒ LSH recall is 1 here (deterministic)
-    assert approx == exact
-    assert len(exact) > 0
+    kw = dict(id_col="doc_id", text_col="text", threshold=0.5)
+    for docs in (_docs(spark), _edge_docs(spark)):
+        exact = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in jaccard_pairs(docs, uncapped_ok=True, **kw).collect()
+        }
+        approx = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in minhash_lsh_pairs(docs, **kw).collect()
+        }
+        # verification scores candidates with exact jaccard ⇒ no false
+        # positives and equal scores; the dups are near-identical ⇒ LSH
+        # recall is 1 here (deterministic)
+        assert approx == exact
+        assert len(exact) > 0
+
+
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "jaccard_pairs", "minhash_probe_candidates"]
+)
+def test_null_text_shingles_to_nothing(spark, op):
+    """SQL semantics for a NULL text: it has no tokens, so it contributes
+    no shingles and matches nothing; the doc-bytes guard lets it pass."""
+    kw = dict(id_col="doc_id", text_col="text")
+    run = {
+        "minhash_lsh_pairs": lambda d: minhash_lsh_pairs(d, **kw),
+        "jaccard_pairs": lambda d: jaccard_pairs(d, uncapped_ok=True, **kw),
+        "minhash_probe_candidates": lambda d: minhash_probe_candidates(
+            minhash_band_index(d, **kw), d, **kw
+        ),
+    }[op]
+    docs = _docs(spark).filter(F.col("doc_id") < 100).select("doc_id", "text")
+    null_text = spark.createDataFrame([(10_000, None)], docs.schema)
+    expected = sorted(run(docs).collect())
+    assert expected
+    assert sorted(run(docs.unionByName(null_text)).collect()) == expected
 
 
 def test_pair_orientation_and_threshold(spark):

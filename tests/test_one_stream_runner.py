@@ -1,8 +1,8 @@
 """Source guard (pure Python, no Spark): every stream in the package starts
 through ``streaming/events.py::run_stream``, no code builds a per-call
 session whose conf and listeners outlive the query, every session is
-built by ``session.get_session``, and no module memoizes relations across
-calls."""
+built by ``session.get_session``, no module memoizes relations across
+calls, and MinHash band buckets are built in one place."""
 
 from __future__ import annotations
 
@@ -98,3 +98,24 @@ def test_no_memoized_relations():
         for lineno, line in enumerate(path.read_text().splitlines(), 1):
             offenders += [f"{rel}:{lineno}: {p}" for p in PERSISTS if p in line]
     assert offenders == []
+
+
+def _calls(node: ast.AST, name: str) -> list[ast.Call]:
+    return [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and name in (getattr(n.func, "attr", None), getattr(n.func, "id", None))
+    ]
+
+
+def test_one_band_bucket_construction():
+    """MinHash band buckets (an explode over per-band ``xxhash64``s) have
+    one construction, ``operators/dedup.py::_band_buckets``, which the
+    batch index, the LSH pairs and the streaming probe all reach."""
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in _calls(ast.parse(path.read_text()), "explode"):
+            if _calls(node, "xxhash64"):
+                sites.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert len(sites) == 1, sites

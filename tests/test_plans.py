@@ -206,9 +206,11 @@ EXCHANGE_BUDGETS = {
     # spread + votes groupBy + fp backfill join + band self-join (2 sides) +
     # pair dedup
     "dedup_simhash": 7,
-    # spread + signature agg + band explode join + candidate dedup + the
-    # shingle-verification joins (count/total per side)
-    "dedup_minhash_lsh": 15,
+    # each of the four doc_shingles references (both band sides, both
+    # shingle-set sides) statically counts its spread + per-doc window (8;
+    # AQE reuses some at run time) + the bucket self-join sides (2) +
+    # candidate dedup + the candidate side of the id_a and id_b joins
+    "dedup_minhash_lsh": 13,
     # spread + block-count agg (salting metadata) + salted task shuffle
     "dedup_embedding_cosine": 3,
     # spread + partial-topk merge window

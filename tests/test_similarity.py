@@ -911,18 +911,19 @@ def _ann_search(op, emb):
     "op", ["brute_force_topk", "lsh_topk", "ivf_probe", "pq_topk", "ivfpq_topk"]
 )
 def test_ann_operators_skip_null_and_empty_query_sets(spark, op):
-    """SQL semantics for the query side: a NULL query vector matches
-    nothing (its row is skipped), and zero queries give an empty frame with
-    the operator's output schema; neither raises."""
+    """SQL semantics for the query side: a NULL query vector or a NULL
+    query id matches nothing (its row is skipped), and zero queries give an
+    empty frame with the operator's output schema; neither raises."""
     emb = _emb(spark).select("vec_id", "embedding")
     search = _ann_search(op, emb)
     queries = emb.filter(F.col("vec_id") < 3)
     expected = search(queries)
     null_query = spark.createDataFrame([(10_000, None)], emb.schema)
-    with_null = search(queries.unionByName(null_query))
+    null_id = spark.createDataFrame([(None, queries.first().embedding)], emb.schema)
+    with_null = search(queries.unionByName(null_query).unionByName(null_id))
     assert sorted(with_null.collect()) == sorted(expected.collect())
 
-    for no_queries in (queries.limit(0), null_query):
+    for no_queries in (queries.limit(0), null_query, null_id):
         empty = search(no_queries)
         assert empty.schema == expected.schema
         assert empty.collect() == []
