@@ -33,6 +33,35 @@ def words(c: ColumnLike) -> Column:
     return F.filter(toks, lambda t: t != "")
 
 
+def word_ngrams(w: ColumnLike, n: int) -> Column:
+    """The ``n``-token windows of a token array, in order: an array of
+    structs whose fields ``"0"`` .. ``"n-1"`` are the window's tokens.
+    Empty when the array has fewer than ``n`` tokens (or is NULL).
+
+    ``arrays_zip`` of ``n`` shifted slices, so extraction is map-only: no
+    shuffle and no per-document window buffering one document's token rows
+    in one task. Every n-gram construction in the package (shingles, LM
+    n-grams, backoff trigrams, duplicated spans) goes through here.
+
+    Pass a column the previous projection materialized, not an inline
+    ``words(text)``: each slice and size re-evaluates an inline expression
+    (no common-subexpression elimination inside a generator): for
+    ``n=3`` the tokenizer ran 7× per document, and exploding the sf0.1
+    ``documents`` trigrams took 0.83–0.94 s instead of 0.25–0.30 s on
+    4 cores.
+    """
+    w = _col(w)
+    length = F.size(w) - (n - 1)
+    zipped = F.arrays_zip(*[F.slice(w, 1 + j, length) for j in range(n)])
+    return F.when(length >= 1, zipped).otherwise(F.array())
+
+
+def ngram_text(g: Column, n: int) -> Column:
+    """One :func:`word_ngrams` window as text: its ``n`` tokens joined
+    with single spaces."""
+    return F.concat_ws(" ", *[g[str(j)] for j in range(n)])
+
+
 def token_count(c: ColumnLike) -> Column:
     """Whitespace token count — the BPE-ish proxy used for budget math."""
     toks = F.split(F.trim(_col(c)), r"\s+")

@@ -15,7 +15,6 @@ from stupidb_spark.operators.ivf import (
     ivf_rebalance,
     ivf_train,
     rebalance_ivf_index,
-    kmeans_centroids,
     load_ivf_index,
     save_ivf_index,
 )
@@ -45,7 +44,6 @@ from stupidb_spark.operators.lm import (
     backoff_lm_apply,
     backoff_lm_score,
     backoff_lm_train,
-    doc_bigrams,
     doc_ngrams,
     ngram_lm_apply,
     ngram_lm_score,
@@ -73,11 +71,9 @@ __all__ = [
     "build_ivf_index",
     "save_ivf_index",
     "load_ivf_index",
-    "kmeans_centroids",
     "DOC_BYTES_CAP",
     "ScaleWarning",
     "corpus_join_strategy",
-    "doc_bigrams",
     "doc_ngrams",
     "NgramLM",
     "StupidBackoffLM",

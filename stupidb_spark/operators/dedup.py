@@ -28,16 +28,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from stupidb_spark.functions.text import words
+from stupidb_spark.functions.text import ngram_text, word_ngrams, words
 
-#: Default per-document byte cap for the per-document window paths.
-#: ``doc_shingles``'s lead window and the downstream ``n_sh``
-#: whole-partition counts buffer ONE document's exploded token rows inside
-#: a single WindowExec task, so one pathological 100 MB crawl document
-#: becomes a multi-GB straggler/OOM task regardless of corpus size. 8 MiB
-#: of text is ~1.5M tokens ≈ ~100 MB of buffered (doc, pos, token) rows —
-#: loud-fail territory, well before executor-OOM territory. Same philosophy
-#: as ``functions.navigation.DYNAMIC_PARTITION_ROW_CAP``: fail the job with
+#: Default per-document byte cap for the per-document paths.
+#: ``doc_shingles`` shuffles each document's shingle rows to ONE task (its
+#: doc-keyed dedup), and the downstream per-doc ``n_sh`` window count and
+#: ``collect_set`` shingle sets hold one document's rows in that task, so
+#: one pathological 100 MB crawl document becomes a multi-GB straggler/OOM
+#: task regardless of corpus size. 8 MiB of text is ~1.5M tokens ≈ ~100 MB
+#: of (doc, shingle) rows — loud-fail territory, well before executor-OOM
+#: territory. Same philosophy as
+#: ``functions.navigation.DYNAMIC_PARTITION_ROW_CAP``: fail the job with
 #: the offending document named instead of silently melting an executor.
 DOC_BYTES_CAP = 8 << 20
 
@@ -102,8 +103,8 @@ def _doc_bytes_guard(
             nb.cast("string"),
             F.lit(
                 f" bytes of text, over the max_doc_bytes cap of {cap}; its"
-                " exploded token rows would buffer inside ONE WindowExec"
-                " task. Pre-chunk with chunk_text / truncate the text, or"
+                " shingle rows would all land in ONE per-document task."
+                " Pre-chunk with chunk_text / truncate the text, or"
                 " raise max_doc_bytes explicitly to own the memory math"
             ),
         ),
@@ -119,22 +120,15 @@ def _doc_bytes_guard(
 
 
 def word_shingles(w: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles over a **materialized** words-array column.
-
-    Pure Catalyst: transform over a sequence of start offsets → dedupe
-    (``slice`` is 1-based). ``w`` MUST be a materialized column (e.g. via
+    """Distinct k-word shingles over a **materialized** words-array column:
+    the :func:`~stupidb_spark.functions.text.word_ngrams` windows, each
+    joined with spaces, deduplicated. Pass a materialized column (e.g. via
     ``withColumn("_w", words(text))``), not an inline ``words(text)``
-    expression: higher-order lambdas have no common-subexpression
-    elimination, so an inline expression re-runs the regex split once per
-    offset — measured ~50× slower on real documents.
+    expression, which would re-run the regex split for every slice.
     """
-    n = F.size(w)
-    # guard n < k: sequence(1, 0) would count DOWN ([1, 0]) and emit garbage
-    starts = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-        F.array().cast("array<int>")
+    return F.array_distinct(
+        F.transform(word_ngrams(w, k), lambda g: ngram_text(g, k))
     )
-    sh = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-    return F.array_distinct(sh)
 
 
 def exact_dedup(
@@ -169,55 +163,42 @@ def doc_shingles(
     max_doc_bytes: int | None = DOC_BYTES_CAP,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Distinct k-word shingles as exploded ``(doc, shingle)`` rows.
+    """Distinct k-word shingles as exploded ``(doc, shingle)`` rows: the
+    union of the shingles of every row carrying that ``doc`` id (a
+    shingle never spans two rows).
 
     ``carry_cols`` rides doc-level columns through the explode (e.g. a
-    target flag): a few bytes per gram row in the per-doc window shuffle,
-    where re-attaching them afterwards would cost a full gram-scale
-    corpus join (measured on text_dsir_weights, r14). The columns MUST be
-    functionally dependent on ``id_col`` — the final per-(doc, shingle)
-    distinct keeps an arbitrary row's values, which is only deterministic
-    when every duplicate carries the same value.
+    target flag): a few bytes per gram row in the doc-keyed shuffle, where
+    re-attaching them afterwards would cost a full gram-scale corpus join
+    (measured on text_dsir_weights, r14). The columns MUST be functionally
+    dependent on ``id_col`` — the final per-(doc, shingle) distinct keeps
+    an arbitrary row's values, which is only deterministic when every
+    duplicate carries the same value.
 
-    Formulated with posexplode + a lead window + concat, NOT array
-    higher-order functions: HOF lambdas evaluate in the interpreted
-    expression path and — worse — the optimizer inlines any aliased
-    expensive expression into Filter/Generate/lambda references with no
-    CSE, re-running the regex tokenizer per shingle offset (measured ~10×).
-    Window/aggregate outputs are materialized attributes, immune to
-    re-inlining, and every operator here is whole-stage-codegen'd.
-
-    The per-doc window shuffle is also the shape that scales: shingling is
-    embarrassingly parallel over (doc, pos) rows rather than per-document
-    array folds bounded by the largest document — EXCEPT that the lead
-    window (and any downstream per-doc window count) still buffers one
-    document's rows in one task, so a single mega-document is a
-    straggler/OOM hazard no amount of parallelism fixes. ``max_doc_bytes``
-    (default :data:`DOC_BYTES_CAP`) guards that edge loudly: any document
-    over the cap fails the job with its id and size in the message. Pass
-    ``None`` to waive; pre-chunk genuinely long documents with
+    Windows come map-side from
+    :func:`~stupidb_spark.functions.text.word_ngrams` inside the scan task.
+    The one shuffle is the doc-keyed ``repartition`` under the distinct:
+    hash-partitioning on ``doc`` alone also satisfies every downstream
+    per-document consumer (the pair counts' ``n_sh`` window, the MinHash
+    signature aggregate, the shingle sets), so they reuse it instead of
+    each shuffling again. That shuffle lands one document's shingle rows in
+    one task, so a single mega-document is a straggler/OOM hazard no amount
+    of parallelism fixes. ``max_doc_bytes`` (default :data:`DOC_BYTES_CAP`)
+    guards that edge loudly: any document over the cap fails the job with
+    its id and size in the message. Pass ``None`` to waive; pre-chunk
+    genuinely long documents with
     :func:`~stupidb_spark.operators.chunking.chunk_text`.
     """
-    from pyspark.sql.window import Window as W
-
     carry = list(carry_cols)
     base = spread_small_scan(
         df.select(F.col(id_col).alias("doc"), F.col(text_col), *carry)
     )
     base = _doc_bytes_guard(base, text_col, max_doc_bytes, "doc_shingles")
-    toks = base.select(
-        "doc", *carry, F.posexplode(words(F.col(text_col))).alias("pos", "w")
-    )
-    wspec = W.partitionBy("doc").orderBy("pos")
-    lead_cols = [F.lead("w", i).over(wspec).alias(f"w{i}") for i in range(1, k)]
-    leads = toks.select("doc", *carry, "w", *lead_cols)
+    toks = base.select("doc", *carry, words(F.col(text_col)).alias("w"))
+    grams = toks.select("doc", *carry, F.explode(word_ngrams("w", k)).alias("g"))
     return (
-        leads.filter(F.col(f"w{k - 1}").isNotNull())
-        .select(
-            "doc",
-            *carry,
-            F.concat_ws(" ", "w", *[f"w{i}" for i in range(1, k)]).alias("shingle"),
-        )
+        grams.select("doc", *carry, ngram_text(F.col("g"), k).alias("shingle"))
+        .repartition("doc")
         .dropDuplicates(["doc", "shingle"])
     )
 
@@ -415,8 +396,9 @@ def _pair_overlap_counts(
         ex = ex.hint(corpus_join_strategy()).join(keep.hint(corpus_join_strategy()), "shingle")
     # Per-doc (capped-universe) shingle counts ride each exploded row as a
     # whole-partition window count — partition = one document, bounded by
-    # document length, no orderBy ⇒ no sort — and flow through the pair
-    # groupBy as min(). This removes the separate n_sh relation and its two
+    # document length, no orderBy ⇒ no sort; uncapped, it reuses
+    # doc_shingles' doc-keyed exchange — and flow through the pair groupBy
+    # as min(). This removes the separate n_sh relation and its two
     # corpus-keyed join-backs entirely. The 100x probe (SCALE.md) showed why
     # that matters: Catalyst's post-explode/post-aggregate size estimates
     # sat under the auto-broadcast threshold at 500k docs and statically
@@ -964,10 +946,9 @@ def minhash_probe_candidates(
     pre-join aggregation — so the SAME function runs unchanged on a
     ``readStream`` DataFrame as a stream-static join
     (:func:`stupidb_spark.streaming.documents.dup_flagged_stream`). The
-    array HOF path re-runs nothing per-document-pair (one fold per doc)
-    and the probe batch is ingest-sized, so the ~10× HOF-vs-window penalty
-    doc_shingles documents is paid on the small side only; the corpus side
-    stays on the window/hash-agg path inside the index.
+    array folds run once per probe document, and the probe batch is
+    ingest-sized; the corpus side stays on the exploded-rows hash-aggregate
+    path inside the index.
 
     A probe document with identical text to an indexed document collides
     in EVERY band (same distinct-shingle set → same signature → same

@@ -122,18 +122,6 @@ def ivf_train(
     return centroids
 
 
-# Back-compat alias (pre-split name); same contract, sample-trained now.
-def kmeans_centroids(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 16,
-    iters: int = 3,
-) -> np.ndarray:
-    return ivf_train(df, id_col=id_col, vec_col=vec_col, k=k, iters=iters)
-
-
 # component-quantization scale for exact distributed centroid sums: fine
 # enough that refined centroids sit within 1e-6 of the float means, coarse
 # enough that petabyte-scale cell sums stay far below 2^63 (and below 2^53

@@ -17,9 +17,9 @@ Scale design (100 TB):
   are pinned via :func:`~stupidb_spark.operators.dedup.corpus_join_strategy`
   — never an estimate-driven broadcast (the text_rarity_score lesson).
   Only V(lang) — one row per language — rides a broadcast.
-- Bigram extraction is MAP-ONLY (arrays_zip of two array slices, exploded
-  — zero shuffles, no per-doc WindowExec; see :func:`doc_bigrams` for the
-  deliberate tokenize-a-few-times-vs-shuffle-every-token trade), keeping
+- Bigram extraction is MAP-ONLY (the
+  :func:`~stupidb_spark.functions.text.word_ngrams` windows, exploded —
+  zero shuffles, no per-doc WindowExec), keeping
   token multiplicity (an LM weights a repeated bigram per occurrence,
   unlike dedup's distinct shingles). The ``max_doc_bytes`` guard still
   applies at the source for predictable task sizes.
@@ -43,7 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stupidb_spark.functions.text import words
+from stupidb_spark.functions.text import word_ngrams, words
 from stupidb_spark.operators.dedup import (
     DOC_BYTES_CAP,
     _doc_bytes_guard,
@@ -53,48 +53,42 @@ from stupidb_spark.operators.dedup import (
 from stupidb_spark.operators.lineage import cut_lineage
 
 
-def doc_bigrams(
+def doc_ngrams(
     df: DataFrame,
     *,
     id_col: str,
     text_col: str,
+    n: int,
     lang_col: str | None = None,
     max_doc_bytes: int | None = DOC_BYTES_CAP,
 ) -> DataFrame:
-    """Per-document bigrams WITH multiplicity as ``(doc[, lang], w1, w2)``
+    """Per-document n-grams WITH multiplicity as ``(doc[, lang], w1..wn)``
     rows — the non-distinct sibling of
     :func:`~stupidb_spark.operators.dedup.doc_shingles` (an LM weights a
-    repeated bigram once per occurrence; dedup wants set semantics).
+    repeated n-gram once per occurrence; dedup wants set semantics).
 
-    MAP-ONLY formulation: adjacent tokens are paired with
-    ``arrays_zip(slice(w, 1, n−1), slice(w, 2, n−1))`` and exploded — zero
-    shuffles, unlike the shingle path's per-doc lead window. The trade,
-    chosen deliberately: Catalyst inlines the aliased ``words(text)`` into
-    each reference (no CSE for projections feeding a Generate), so the
-    tokenizer runs a small CONSTANT number of times per document — cheap
-    local regex work — versus shuffling and sorting every token row across
-    the cluster. With no WindowExec, a mega-document is only a linear
-    scan-task straggler, not a buffered-partition OOM; the byte guard still
-    applies to keep task sizes predictable.
+    The :func:`~stupidb_spark.functions.text.word_ngrams` windows of the
+    document's token array, exploded map-only — zero shuffles, versus
+    shuffling and sorting every token row across the cluster. With no
+    WindowExec, a mega-document is only a linear scan-task straggler, not a
+    buffered-partition OOM; the byte guard still applies to keep task sizes
+    predictable.
     """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     keep = [F.col(id_col).alias("doc"), F.col(text_col)] + (
         [F.col(lang_col).alias("lang")] if lang_col else []
     )
     base = spread_small_scan(df.select(*keep))
-    base = _doc_bytes_guard(base, text_col, max_doc_bytes, "doc_bigrams")
+    base = _doc_bytes_guard(base, text_col, max_doc_bytes, "doc_ngrams")
     extra = ["lang"] if lang_col else []
-    w = words(F.col(text_col))
-    n = F.size(w)
-    pairs = F.when(
-        n >= 2, F.arrays_zip(F.slice(w, 1, n - 1), F.slice(w, 2, n - 1))
-    ).otherwise(F.array())
-    return base.select(
-        "doc", *extra, F.explode(pairs).alias("__bg")
+    toks = base.select("doc", *extra, words(F.col(text_col)).alias("__w"))
+    return toks.select(
+        "doc", *extra, F.explode(word_ngrams("__w", n)).alias("__ng")
     ).select(
         "doc",
         *extra,
-        F.col("__bg")["0"].alias("w1"),
-        F.col("__bg")["1"].alias("w2"),
+        *[F.col("__ng")[str(j)].alias(f"w{j + 1}") for j in range(n)],
     )
 
 
@@ -123,10 +117,11 @@ def ngram_lm_train(
 ) -> NgramLM:
     """Fit the per-language add-k bigram model on a reference corpus —
     three aggregates, no driver-side state."""
-    ref_bg = doc_bigrams(
+    ref_bg = doc_ngrams(
         ref,
         id_col=id_col,
         text_col=text_col,
+        n=2,
         lang_col=lang_col,
         max_doc_bytes=max_doc_bytes,
     )
@@ -169,7 +164,7 @@ def ngram_lm_apply(
 ) -> DataFrame:
     """Score ``docs`` (batch OR streaming) under a trained model.
 
-    Streaming ``docs`` compose natively: ``doc_bigrams`` is map-only, the
+    Streaming ``docs`` compose natively: ``doc_ngrams`` is map-only, the
     model joins are stream-static joins, and the per-doc rollup is a
     streaming aggregation (run in ``complete``/``update`` mode, or attach a
     watermark on an ingest timestamp for bounded state). Join-strategy
@@ -177,10 +172,11 @@ def ngram_lm_apply(
     its own strategy for stream-static joins.
     """
     k = model.k
-    doc_bg = doc_bigrams(
+    doc_bg = doc_ngrams(
         docs,
         id_col=id_col,
         text_col=text_col,
+        n=2,
         lang_col=lang_col,
         max_doc_bytes=max_doc_bytes,
     )
@@ -291,40 +287,6 @@ def ngram_lm_score(
     )
 
 
-def doc_ngrams(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    n: int,
-    lang_col: str | None = None,
-    max_doc_bytes: int | None = DOC_BYTES_CAP,
-) -> DataFrame:
-    """Per-document n-grams with multiplicity as ``(doc[, lang], w1..wn)``
-    rows — :func:`doc_bigrams` generalized: arrays_zip of ``n`` shifted
-    slices, exploded map-only (zero shuffles)."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    keep = [F.col(id_col).alias("doc"), F.col(text_col)] + (
-        [F.col(lang_col).alias("lang")] if lang_col else []
-    )
-    base = spread_small_scan(df.select(*keep))
-    base = _doc_bytes_guard(base, text_col, max_doc_bytes, "doc_ngrams")
-    extra = ["lang"] if lang_col else []
-    w = words(F.col(text_col))
-    sz = F.size(w)
-    length = sz - (n - 1)
-    zipped = F.arrays_zip(*[F.slice(w, 1 + j, length) for j in range(n)])
-    pairs = F.when(sz >= n, zipped).otherwise(F.array())
-    return base.select(
-        "doc", *extra, F.explode(pairs).alias("__ng")
-    ).select(
-        "doc",
-        *extra,
-        *[F.col("__ng")[str(j)].alias(f"w{j + 1}") for j in range(n)],
-    )
-
-
 @dataclass
 class StupidBackoffLM:
     """Stupid Backoff trigram model (Brants et al., EMNLP 2007 — the
@@ -379,14 +341,14 @@ def backoff_lm_train(
     ]
     base = spread_small_scan(ref.select(*keep))
     base = _doc_bytes_guard(base, text_col, max_doc_bytes, "backoff_lm_train")
-    w = words(F.col(text_col))
-    sz = F.size(w)
     pad = F.concat(
-        w, F.array(F.lit(None).cast("string"), F.lit(None).cast("string"))
+        words(F.col(text_col)),
+        F.array(F.lit(None).cast("string"), F.lit(None).cast("string")),
     )
-    zipped = F.arrays_zip(*[F.slice(pad, 1 + j, sz) for j in range(3)])
-    grams = F.when(sz >= 1, zipped).otherwise(F.array())
-    pg = base.select("lang", F.explode(grams).alias("__g")).select(
+    toks = base.select("lang", pad.alias("__pad"))
+    pg = toks.select(
+        "lang", F.explode(word_ngrams("__pad", 3)).alias("__g")
+    ).select(
         "lang",
         F.col("__g")["0"].alias("w1"),
         F.col("__g")["1"].alias("w2"),

@@ -31,8 +31,8 @@ BENCH_MOD = 97  # doc_id % BENCH_MOD == 0 plays the "benchmark" holdout
 TOPK_TERMS = 20
 
 # 5-word-gram sets per document, mirrored exactly by operators/dedup.py::
-# doc_shingles(k=5) (posexplode + lead window on the Spark side — see that
-# docstring for why NOT an array comprehension there).
+# doc_shingles(k=5) (functions/text.py::word_ngrams windows on the Spark
+# side).
 _DUCK_GRAMS5 = """
         SELECT doc_id,
                list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' '

@@ -729,6 +729,39 @@ def text_lm_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_W = 5
 
 
+def _dup_span_positions(sized: DataFrame) -> DataFrame:
+    """``(doc_id, p)`` rows: every token position of ``sized`` (``doc_id``,
+    token array ``t``) inside a ``_SPAN_W``-token window whose exact text
+    also occurs in another document, once per such window. The shared
+    inverted-index subtree of the two duplicated-span queries."""
+    from stupidb_spark.operators.lineage import cut_lineage
+
+    W = _SPAN_W
+    # spans feeds TWO consumers (the dup-df aggregate and the hit join
+    # probe); the lazy localCheckpoint keeps the tokenize+enumerate pass
+    # to ONE execution (the components.py idiom). Rows are (doc, pos, ng)
+    # — gram-scale but with the token arrays already projected away.
+    spans = cut_lineage(
+        sized.select(
+            "doc_id", F.posexplode(T.word_ngrams("t", W)).alias("pos", "g")
+        ).select("doc_id", "pos", T.ngram_text(F.col("g"), W).alias("ng")),
+        eager=False,
+    )
+    dup = (
+        spans.groupBy("ng")
+        .agg(F.count_distinct("doc_id").alias("df"))
+        .where(F.col("df") >= 2)
+        .select("ng")
+    )
+    hits = spans.hint(corpus_join_strategy()).join(
+        dup.hint(corpus_join_strategy()), "ng"
+    )
+    return hits.select(
+        "doc_id",
+        F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(W - 1))).alias("p"),
+    )
+
+
 @q(
     "text_dup_spans",
     f"""
@@ -777,9 +810,9 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles instead of a global sort.
     #
     # Scale story: window enumeration is map-side inside the scan task
-    # (transform over sequence — no per-doc WindowExec, so no mega-doc
-    # straggler; the doc_shingles byte guard applies upstream for prep
-    # pipelines). Shuffles: (1) ngram df partial-agg, (2) the ngram-keyed
+    # (functions/text.py::word_ngrams — no per-doc WindowExec, so no
+    # mega-doc straggler; the doc_shingles byte guard applies upstream for
+    # prep pipelines). Shuffles: (1) ngram df partial-agg, (2) the ngram-keyed
     # hit join — both sides corpus-sized post-explode, hence
     # corpus_join_strategy-PINNED (never estimate-broadcast, cf. the 100x
     # probe), (3) distinct covered positions, (4) the doc-keyed rollup
@@ -787,9 +820,7 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5-gram string to cut shuffle bytes ~6x; the oracled form keeps the
     # exact string so both engines compare the identical relation.
     from stupidb_spark.operators.dedup import spread_small_scan
-    from stupidb_spark.operators.lineage import cut_lineage
 
-    W = _SPAN_W
     # spread before the tokenize+window-enumeration pass: the fixture scan
     # arrives as 1-2 partitions, which serialized the whole regex+explode
     # onto one core (r14 profile: two ~1 s single-task corpus passes); at
@@ -799,37 +830,7 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", T.words(F.col("text")).alias("t"))
         .withColumn("n_tokens", F.size("t"))
     )
-    # spans feeds TWO consumers (the dup-df aggregate and the hit join
-    # probe); the lazy localCheckpoint keeps the tokenize+enumerate pass
-    # to ONE execution (the components.py idiom). Rows are (doc, pos, ng)
-    # — gram-scale but with the token arrays already projected away.
-    spans = cut_lineage(
-        sized.where(F.col("n_tokens") >= W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, n_tokens - {W}), i -> "
-                    f"struct(i AS pos, array_join(slice(t, i + 1, {W}), ' ') AS ng))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.ng").alias("ng")),
-        eager=False,
-    )
-    dup = (
-        spans.groupBy("ng")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") >= 2)
-        .select("ng")
-    )
-    hits = spans.hint(corpus_join_strategy()).join(
-        dup.hint(corpus_join_strategy()), "ng"
-    )
-    cov = hits.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(W - 1))).alias("p"),
-    ).distinct()
+    cov = _dup_span_positions(sized).distinct()
     cnt = cov.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_dup_pos"))
     return (
         sized.select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
@@ -966,8 +967,8 @@ def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iff no duplicated window covers its position; survivors rejoin in
     # original order.
     #
-    # Same inverted-index subtree as text_dup_spans (map-side window
-    # enumeration, strategy-pinned ngram joins). The reassembly avoids a
+    # Same inverted-index subtree as text_dup_spans
+    # (_dup_span_positions). The reassembly avoids a
     # second corpus explode: covered positions fold into ONE per-doc
     # collect_set (bounded by the doc's own token count — the mega-doc
     # guard upstream bounds that), and the surviving tokens are selected
@@ -976,46 +977,16 @@ def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stupidb_spark.operators.dedup import spread_small_scan
     from stupidb_spark.operators.lineage import cut_lineage
 
-    W = _SPAN_W
-    # Same spread + single-execution spans as text_dup_spans (see there):
-    # the scan spread parallelizes the tokenize+enumerate pass and the
-    # lazy localCheckpoint stops its second execution under the hit join.
+    # Same spread as text_dup_spans (see there); the lazy localCheckpoint
+    # stops the tokenize pass re-running for the reassembly join.
     sized = cut_lineage(
         spread_small_scan(_docs(spark, sf_dir).select("doc_id", "text"))
         .select("doc_id", T.words(F.col("text")).alias("t"))
         .withColumn("n_tokens", F.size("t")),
         eager=False,
     )
-    spans = cut_lineage(
-        sized.where(F.col("n_tokens") >= W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, n_tokens - {W}), i -> "
-                    f"struct(i AS pos, array_join(slice(t, i + 1, {W}), ' ') AS ng))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.ng").alias("ng")),
-        eager=False,
-    )
-    dup = (
-        spans.groupBy("ng")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") >= 2)
-        .select("ng")
-    )
-    hits = spans.hint(corpus_join_strategy()).join(
-        dup.hint(corpus_join_strategy()), "ng"
-    )
     cov = (
-        hits.select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(W - 1))
-            ).alias("p"),
-        )
+        _dup_span_positions(sized)
         .groupBy("doc_id")
         .agg(F.collect_set("p").alias("cov_ps"))
     )

@@ -83,8 +83,9 @@ FIXTURE_SCHEMAS: dict[str, StructType] = {
     # events.ts is physically timestamp[us] in the current fixtures, which
     # Spark's vectorized reader handles natively as TimestampType. If a
     # future regeneration writes TIMESTAMP(NANOS) instead (which the
-    # vectorized reader rejects), load_table sniffs the footer and falls back
-    # to the legacy nanosAsLong read + ns→µs truncation (what DuckDB does).
+    # vectorized reader rejects), read_fixture sniffs the footer and falls
+    # back to the legacy nanosAsLong read + ns→µs truncation (what DuckDB
+    # does).
     "events": _st(
         ("event_id", LongType()),
         ("ts", TimestampType()),
@@ -113,12 +114,6 @@ TABLE_NAMES = tuple(FIXTURE_SCHEMAS)
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
 
-# Cache of footer sniffs: path -> True iff events.ts is physically
-# TIMESTAMP(NANOS). One pyarrow footer read per directory per process — the
-# 100 TB analogue is a metastore lookup, not a data scan.
-_EVENTS_TS_IS_NANOS: dict[str, bool] = {}
-
-
 def parquet_ts_is_nanos(path: str) -> bool:
     """True iff ``path`` stores ``ts`` as physical TIMESTAMP(NANOS).
 
@@ -140,13 +135,67 @@ def parquet_ts_is_nanos(path: str) -> bool:
     return False
 
 
-def events_ts_is_nanos(sf_dir: str) -> bool:
-    """Cached footer sniff for ``{sf_dir}/events.parquet``."""
-    path = f"{sf_dir}/events.parquet"
-    cached = _EVENTS_TS_IS_NANOS.get(path)
-    if cached is None:
-        cached = _EVENTS_TS_IS_NANOS[path] = parquet_ts_is_nanos(path)
-    return cached
+def _first_parquet_file(path: str) -> str:
+    """``path`` itself when it is a file, else the first ``*.parquet``
+    under it (``path`` may be a directory or a glob)."""
+    import glob
+    import os
+
+    if os.path.isfile(path):
+        return path
+    found = sorted(glob.glob(f"{path}/*.parquet")) or sorted(
+        glob.glob(f"{path}/**/*.parquet", recursive=True)
+    )
+    if not found:
+        # The sniff decides the schema for the whole read; guessing on an
+        # empty stream directory would silently misread TIMESTAMP(NANOS)
+        # files staged later.
+        raise FileNotFoundError(
+            f"no parquet files in {path} to sniff the timestamp physical type"
+            " from — stage at least one file before defining a stream (the"
+            " schema is fixed at definition time)"
+        )
+    return found[0]
+
+
+def read_fixture(
+    spark: SparkSession,
+    name: str,
+    path: str,
+    *,
+    stream: bool = False,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Read fixture table ``name`` from the parquet at ``path`` with its
+    pinned schema: a batch read, or with ``stream=True`` a file-source
+    stream (``max_files_per_trigger=1`` makes each staged file its own
+    micro-batch).
+
+    ``events.ts`` is read natively when it is timestamp[us]. A
+    TIMESTAMP(NANOS) file, which Spark's vectorized reader rejects as
+    TimestampType, is read as raw nanos and truncated to µs (DuckDB's ns→µs
+    cast). The footer is sniffed on every call — one local metadata read —
+    so a file rewritten in place between reads is read as it now is.
+    """
+    from pyspark.sql import functions as F
+
+    schema = FIXTURE_SCHEMAS[name]
+    nanos = name == "events" and parquet_ts_is_nanos(_first_parquet_file(path))
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        schema = StructType(
+            [
+                StructField(f.name, LongType() if f.name == "ts" else f.dataType, True)
+                for f in schema.fields
+            ]
+        )
+    reader = (spark.readStream if stream else spark.read).schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    df = reader.parquet(path)
+    if nanos:
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -154,22 +203,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from stupidb_spark.session import ensure_worker_pythonpath
 
     ensure_worker_pythonpath(spark)
-    if name == "events" and events_ts_is_nanos(sf_dir):
-        # Legacy fixture shape: Spark's vectorized reader rejects
-        # TIMESTAMP(NANOS) as TimestampType, so read raw nanos and truncate
-        # to µs (matching DuckDB's ns→µs cast).
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ns_schema = StructType(
-            [
-                StructField(f.name, LongType() if f.name == "ts" else f.dataType, True)
-                for f in FIXTURE_SCHEMAS[name].fields
-            ]
-        )
-        df = spark.read.schema(ns_schema).parquet(f"{sf_dir}/{name}.parquet")
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+    return read_fixture(spark, name, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from stupidb_spark.operators.lm import NgramLM, ngram_lm_apply
-from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
+from stupidb_spark.sources.catalog import read_fixture
 
 
 def stream_documents(
@@ -32,10 +32,13 @@ def stream_documents(
 ) -> DataFrame:
     """File-source stream of documents parquet files dropped into
     ``source_dir`` (the fixture ``documents`` schema, pinned)."""
-    reader = spark.readStream.schema(FIXTURE_SCHEMAS["documents"])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
+    return read_fixture(
+        spark,
+        "documents",
+        source_dir,
+        stream=True,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 def lm_scored_stream(docs_stream: DataFrame, model: NgramLM) -> DataFrame:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
-from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
+from stupidb_spark.sources.catalog import read_fixture
 
 # Bounded-model-state bar for the closure-riding reference: 64k labeled
 # vectors (a few hundred MB at 64 dims) is comfortably "model state" like
@@ -55,10 +55,13 @@ def stream_embeddings(
 ) -> DataFrame:
     """File-source stream of embeddings parquet files dropped into
     ``source_dir`` (the fixture ``embeddings`` schema, pinned)."""
-    reader = spark.readStream.schema(FIXTURE_SCHEMAS["embeddings"])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
+    return read_fixture(
+        spark,
+        "embeddings",
+        source_dir,
+        stream=True,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 def adaptive_spread(

@@ -35,7 +35,7 @@ from pyspark.sql.types import (
 )
 
 from stupidb_spark.functions import exact as X
-from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
+from stupidb_spark.sources.catalog import read_fixture
 
 # ---------------------------------------------------------------------------
 # source
@@ -48,51 +48,21 @@ def stream_events(
     *,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream of events parquet files dropped into ``source_dir``.
-
-    Mirrors ``sources.catalog.load_table('events')``: the current fixture
-    stores ``ts`` as timestamp[us], read natively as TimestampType. A
-    footer-sniffed fallback handles a TIMESTAMP(NANOS) regeneration (raw
-    nanos + ns→µs truncation), keeping both ingestion paths in lockstep.
-    ``max_files_per_trigger=1`` makes each staged file its own micro-batch
-    (used by tests to prove state carries across batches).
+    """File-source stream of events parquet files dropped into ``source_dir``,
+    read by the same :func:`~stupidb_spark.sources.catalog.read_fixture` as
+    the batch ``load_table('events')`` (pinned schema, TIMESTAMP(NANOS)
+    fallback sniffed from the first staged file, so stage at least one
+    before defining the stream). ``max_files_per_trigger=1`` makes each
+    staged file its own micro-batch (used by tests to prove state carries
+    across batches).
     """
-    import glob
-
-    from pyspark.sql.types import LongType as _Long, StructField as _SF, StructType as _ST
-
-    from stupidb_spark.sources.catalog import parquet_ts_is_nanos
-
-    first = sorted(glob.glob(f"{source_dir}/*.parquet")) or sorted(
-        glob.glob(f"{source_dir}/**/*.parquet", recursive=True)
+    return read_fixture(
+        spark,
+        "events",
+        source_dir,
+        stream=True,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if not first:
-        # The sniff decides the whole stream's schema; guessing on an empty
-        # directory would silently misread TIMESTAMP(NANOS) files staged
-        # later. Stage at least one file before defining the stream.
-        raise FileNotFoundError(
-            f"stream_events: no parquet files in {source_dir} to sniff the "
-            "timestamp physical type from — stage at least one file before "
-            "defining the stream (the schema is fixed at definition time)"
-        )
-    is_nanos = parquet_ts_is_nanos(first[0])
-    if is_nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ns_schema = _ST(
-            [
-                _SF(f.name, _Long() if f.name == "ts" else f.dataType, True)
-                for f in FIXTURE_SCHEMAS["events"].fields
-            ]
-        )
-        reader = spark.readStream.schema(ns_schema)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        df = reader.parquet(source_dir)
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    reader = spark.readStream.schema(FIXTURE_SCHEMAS["events"])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -97,3 +97,16 @@ def assert_matches_oracle(sdf, duck_con, sql, *, name=""):
     if left != right:
         diffs = [(l, r) for l, r in zip(left, right) if l != r][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def write_events_parquet(df, path, *, nanos):
+    """Write an events frame as ONE parquet file; ``ts`` physically
+    TIMESTAMP(NANOS) when ``nanos`` else timestamp[us]."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.Table.from_pandas(df.toPandas(), preserve_index=False)
+    ts = table.schema.get_field_index("ts")
+    unit = "ns" if nanos else "us"
+    table = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp(unit)))
+    pq.write_table(table, str(path), version="2.6")

@@ -225,6 +225,37 @@ def test_word_shingles_short_doc_guard(spark):
     assert rows[3] == []
 
 
+@pytest.mark.parametrize(
+    "texts, expected",
+    [
+        # two texts under one id: the union of each row's own shingles,
+        # never a window that runs from one row into the other
+        (
+            ["alpha beta gamma delta", "one two three four"],
+            [
+                "alpha beta gamma",
+                "beta gamma delta",
+                "one two three",
+                "two three four",
+            ],
+        ),
+        # identical texts under one id: each shingle once
+        (
+            ["alpha beta gamma delta", "alpha beta gamma delta"],
+            ["alpha beta gamma", "beta gamma delta"],
+        ),
+    ],
+)
+def test_doc_shingles_duplicate_id_rows(spark, texts, expected):
+    from stupidb_spark.operators.dedup import doc_shingles
+
+    docs = spark.createDataFrame(
+        [(5, t) for t in texts] + [(6, "alpha beta")], "doc_id long, text string"
+    )
+    out = doc_shingles(docs, id_col="doc_id", text_col="text", k=3)
+    assert sorted(map(tuple, out.collect())) == [(5, sh) for sh in expected]
+
+
 def test_jaccard_max_doc_freq_recall_contract(spark):
     # the skew guard drops hot (boilerplate) shingles from both the index
     # and the per-doc counts: planted near-dups sharing informative

@@ -2,7 +2,8 @@
 through ``streaming/events.py::run_stream``, no code builds a per-call
 session whose conf and listeners outlive the query, every session is
 built by ``session.get_session``, no module memoizes relations across
-calls, and MinHash band buckets are built in one place."""
+calls, and MinHash band buckets and token n-grams are each built in one
+place."""
 
 from __future__ import annotations
 
@@ -119,3 +120,24 @@ def test_one_band_bucket_construction():
             if _calls(node, "xxhash64"):
                 sites.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert len(sites) == 1, sites
+
+
+def test_one_ngram_construction():
+    """Token windows (shingles, LM n-grams, backoff trigrams, duplicated
+    spans) have one construction, ``functions/text.py::word_ngrams``: the
+    package's only ``arrays_zip`` call, and no operator rebuilds windows
+    from a per-document ``lead``."""
+    zips = [
+        f"{path.relative_to(ROOT)}:{lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "arrays_zip(" in line
+    ]
+    assert len(zips) == 1, zips
+    assert zips[0].startswith("stupidb_spark/functions/text.py:"), zips
+    leads = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path in sorted((PKG / "operators").rglob("*.py"))
+        for node in _calls(ast.parse(path.read_text()), "lead")
+    ]
+    assert leads == []

@@ -85,6 +85,21 @@ def test_minhash_never_plans_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_shingling_plans_have_no_window(spark):
+    # shingles come map-side from word_ngrams and the doc-keyed dedup
+    # exchange; no per-document WindowExec sorts a document's token rows
+    import re
+
+    for name in (
+        "dedup_minhash_lsh",
+        "contamination_ngram",
+        "contamination_bloom",
+        "dedup_ingest_candidates",
+    ):
+        plan = formatted_plan(QUERIES[name](spark, SF_DIR))
+        assert not re.search(r"\(\d+\) Window\b", plan), name
+
+
 def test_minhash_verification_never_broadcasts(spark):
     # The 100x probe (SCALE.md) caught Catalyst auto-broadcasting the
     # corpus-sized exploded (doc, shingle) relation in the exact-Jaccard
@@ -207,9 +222,9 @@ EXCHANGE_BUDGETS = {
     # pair dedup
     "dedup_simhash": 7,
     # each of the four doc_shingles references (both band sides, both
-    # shingle-set sides) statically counts its spread + per-doc window (8;
-    # AQE reuses some at run time) + the bucket self-join sides (2) +
-    # candidate dedup + the candidate side of the id_a and id_b joins
+    # shingle-set sides) statically counts its spread + doc-keyed shingle
+    # dedup (8; AQE reuses some at run time) + the bucket self-join sides
+    # (2) + candidate dedup + the candidate side of the id_a and id_b joins
     "dedup_minhash_lsh": 13,
     # spread + block-count agg (salting metadata) + salted task shuffle
     "dedup_embedding_cosine": 3,
@@ -232,8 +247,8 @@ EXCHANGE_BUDGETS = {
     "chunk_documents": 0,
     # PII counting + masking are codegen'd regex expressions: NO shuffle
     "pii_redact": 0,
-    # per-doc gram windows + dedup (bench + corpus sides) + the single
-    # combined groupBy; bench grams broadcast, no doc-aligning join
+    # doc-keyed gram dedup (bench + corpus sides) + the single combined
+    # groupBy; bench grams broadcast, no doc-aligning join
     "contamination_ngram": 5,
     # bucket offsets agg + tiny offset window + per-bucket rank window
     # (the broadcast join back adds no exchange)

@@ -19,7 +19,7 @@ from stupidb_spark.sources.readers import (
     table_from_rows,
     write_parquet,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_events_parquet
 
 SCRATCH = Path("/root/repo/.scratch")
 
@@ -193,3 +193,19 @@ def test_compact_parquet_coalesces_small_files(spark, outdir):
     compacted = spark.read.parquet(frag + "_compacted")
     assert compacted.count() == src.count()
     assert sorted(map(tuple, compacted.collect())) == sorted(map(tuple, src.collect()))
+
+
+def test_events_rewritten_in_place_reread_as_written(spark, outdir):
+    """The events footer is sniffed per read: a file rewritten in place
+    from timestamp[us] to TIMESTAMP(NANOS) is read with the nanos fallback
+    on the next load, not with a remembered answer for that path."""
+    from stupidb_spark.sources.catalog import parquet_ts_is_nanos
+
+    src = load_table(spark, SF_DIR, "events").filter(F.col("event_id") < 300)
+    expected = sorted(src.collect())
+    path = outdir / "events.parquet"
+    write_events_parquet(src, path, nanos=False)
+    assert sorted(load_table(spark, str(outdir), "events").collect()) == expected
+    write_events_parquet(src, path, nanos=True)
+    assert parquet_ts_is_nanos(str(path))
+    assert sorted(load_table(spark, str(outdir), "events").collect()) == expected

@@ -25,7 +25,7 @@ from stupidb_spark.streaming import (
     tumbling_stream,
     user_running_totals,
 )
-from tests.conftest import SF_DIR, rowset
+from tests.conftest import SF_DIR, rowset, write_events_parquet
 
 SCRATCH = Path("/root/repo/.scratch")
 
@@ -186,6 +186,20 @@ def test_stream_events_refuses_empty_source_dir(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError, match="sniff"):
         stream_events(spark, str(tmp_path))
+
+
+def test_stream_events_reads_nanos_files(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file streams through the same fallback as
+    the batch read: raw nanos truncated to µs, equal to the batch rows."""
+    from pyspark.sql import functions as F
+
+    from stupidb_spark.sources import load_table
+
+    batch = load_table(spark, SF_DIR, "events").filter(F.col("event_id") < 300)
+    src = tmp_path / "ingest"
+    src.mkdir()
+    write_events_parquet(batch, src / "part-000.parquet", nanos=True)
+    _assert_same(_run(spark, stream_events(spark, str(src)), tmp_path), batch)
 
 
 
@@ -570,7 +584,7 @@ def test_watermark_finalizes_windows_and_drops_late_rows(spark):
     import datetime as dt
     import os
 
-    from stupidb_spark.streaming.events import FIXTURE_SCHEMAS
+    from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
 
     d = SCRATCH / f"stream-wm-{uuid.uuid4().hex[:8]}"
     ingest = d / "ingest"
@@ -632,7 +646,7 @@ def test_session_append_emits_at_exact_watermark_boundary(spark):
     import glob
     import os
 
-    from stupidb_spark.streaming.events import FIXTURE_SCHEMAS
+    from stupidb_spark.sources.catalog import FIXTURE_SCHEMAS
 
     d = SCRATCH / f"stream-sessb-{uuid.uuid4().hex[:8]}"
     ingest = d / "ingest"
