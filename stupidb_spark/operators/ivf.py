@@ -19,17 +19,20 @@ inside a query:
 - :func:`ivf_index` is one map-only pass assigning every base vector to its
   cell (vectorized matmul per Arrow batch). At scale the result is written
   partitioned by cell (:func:`save_ivf_index`) so probes are pruned scans.
-- :func:`ivf_probe` explodes each query into its ``n_probe`` nearest cells
-  and scores only those cells' vectors — no k-means, no full scan.
+- :func:`ivf_probe` scores each query against only its ``n_probe``
+  nearest cells' vectors — no k-means, no full scan. It is the shared ANN
+  top-k scan (``operators/similarity.py::_score_topk``) with the
+  probe-cell candidate mask (:func:`_probe_mask`).
 
 :func:`ivf_topk` composes the three for one-shot use: every call trains and
 indexes from its inputs, so a result never outlives the data it was built
 from. Reuse across calls goes through the durable index table
 (:func:`save_ivf_index` / :func:`load_ivf_index`).
 
-Deterministic: the training sample is the ``n_train`` lowest-id vectors,
-seeds are the first ``k`` of those, iteration count is fixed — same inputs,
-same index.
+Deterministic: the training sample is the ``n_train`` lowest-id vectors
+(``similarity.py::collect_train_matrix``), seeds are the first ``k`` of
+those, iteration count is fixed — same inputs, same index. The one cosine
+Lloyd (:func:`_cosine_lloyd`) also fits the sub-centroids of a rebalance.
 """
 
 from __future__ import annotations
@@ -43,12 +46,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.similarity import (
-    SPREAD_BYTES_PER_TASK,
+    _batch_vectors,
+    _quant_norms,
+    _quant_sims,
+    _score_topk,
+    base_scan,
     collect_query_matrix,
+    collect_train_matrix,
     no_neighbors,
-    rank_topk,
     spread_small_scan,
 )
+
+# ivf_train's sample size and Lloyd iterations; ivfpq_build trains its
+# cells with the same
+IVF_TRAIN_ROWS, IVF_ITERS = 4096, 3
 
 
 def _normalize(M: np.ndarray) -> np.ndarray:
@@ -86,14 +97,43 @@ def _probe_cells(Q: np.ndarray, centroids: np.ndarray, n_probe: int) -> np.ndarr
     return np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
 
 
+def _probe_mask(
+    Q: np.ndarray, centroids: np.ndarray, n_probe: int
+) -> tuple[np.ndarray, list[int]]:
+    """The (nq, n_centroids) mask "query j probes cell c", and the sorted
+    cells any query probes. Both probes filter on that cell set STATICALLY,
+    so a cell-partitioned index scans only probed partitions (partition
+    pruning at plan time, not dynamic pruning at run time)."""
+    mask = np.zeros((len(Q), len(centroids)), dtype=bool)
+    np.put_along_axis(mask, _probe_cells(Q, centroids, n_probe), True, axis=1)
+    return mask, np.flatnonzero(mask.any(axis=0)).tolist()
+
+
+def _cosine_lloyd(X: np.ndarray, seeds: np.ndarray, iters: int) -> np.ndarray:
+    """Deterministic Lloyd's k-means on a driver-side sample: the rows
+    ``X[seeds]`` seed the centroids, assignment is by cosine, the update is
+    the members' mean, the iteration count is fixed, and a cell with no
+    members keeps its centroid."""
+    Xn = _normalize(X)
+    centroids = X[seeds]
+    for _ in range(iters):
+        C = _normalize(centroids)
+        assign = np.argmax(Xn @ C.T, axis=1)  # cosine assignment
+        for c in range(len(centroids)):
+            members = X[assign == c]
+            if len(members):
+                centroids[c] = members.mean(axis=0)
+    return centroids
+
+
 def ivf_train(
     df: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 16,
-    iters: int = 3,
-    n_train: int = 4096,
+    iters: int = IVF_ITERS,
+    n_train: int = IVF_TRAIN_ROWS,
 ) -> np.ndarray:
     """Fit the coarse quantizer: deterministic Lloyd's k-means on the
     ``n_train`` lowest-id vectors (one bounded TakeOrdered collect — the
@@ -103,23 +143,8 @@ def ivf_train(
     quality needs a distribution sketch, not the data set, so training cost
     is O(n_train · k · dim · iters) on the driver regardless of table size.
     """
-    rows = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(n_train)
-        .collect()
-    )
-    X = np.stack([np.array(r._v, dtype=np.float64) for r in rows])
-    Xn = _normalize(X)
-    centroids = X[:k].copy()
-    for _ in range(iters):
-        C = _normalize(centroids)
-        assign = np.argmax(Xn @ C.T, axis=1)  # cosine assignment
-        for c in range(k):
-            members = X[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids
+    X = collect_train_matrix(df, id_col, vec_col, n_train)
+    return _cosine_lloyd(X, np.arange(min(k, len(X))), iters)
 
 
 # component-quantization scale for exact distributed centroid sums: fine
@@ -252,7 +277,8 @@ def ivf_index(
 ) -> DataFrame:
     """Assign every base vector to its nearest cell — one map-only pass
     (columns: neighbor_id, b_vec, cell). At scale, write this partitioned or
-    bucketed by ``cell`` so probes scan only probed cells."""
+    bucketed by ``cell`` so probes scan only probed cells. A NULL vector
+    is not indexed (:func:`~stupidb_spark.operators.similarity.base_scan`)."""
     # coalesce-to-0 never fires (argmax always yields an int) but marks
     # `cell` non-nullable, so downstream joins on it don't infer an
     # isnotnull(cell) filter — which would push below the scan spread and
@@ -263,18 +289,7 @@ def ivf_index(
     # through it, or Catalyst re-runs the assignment below the spread, in
     # the single-task scan stage (measured at sf0.1 on 4 cores:
     # ann_topk_ivf 1.50 s with the second pass, 1.32-1.35 s without).
-    #
-    # Volume-derived spread width (guide §2, the knn_join probe rule): the
-    # assignment is a vectorized matmul — light per byte — so core-count
-    # width on a kilobyte-scale scan multiplies fixed task overhead for
-    # ~1 ms of numpy per task (r15: three 32-task checkpoint consumers at
-    # ~430 ms/task of overhead in the dedup_semantic profile).
-    return spread_small_scan(
-        base.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
-        ),
-        bytes_per_task=SPREAD_BYTES_PER_TASK,
-    ).withColumn(
+    return base_scan(base, id_col, vec_col).withColumn(
         "cell",
         F.coalesce(_assign_udf(centroids).asNondeterministic()("b_vec"), F.lit(0)),
     )
@@ -290,67 +305,35 @@ def ivf_probe(
     k: int = 10,
     n_probe: int = 6,
 ) -> DataFrame:
-    """Probe a prebuilt index: each query fans out to its ``n_probe``
-    nearest cells (computed driver-side on the collected query matrix —
-    queries are the small, broadcastable side), and only those cells' index
-    rows are scored. The scorer is the same ``mapInPandas`` shape as
-    :func:`~stupidb_spark.operators.similarity.brute_force_topk` — query
-    matrix embedded, one matmul per Arrow batch, a per-query cell-membership
-    mask instead of a probe-pair join, batch-local top-k — so no vector ever
-    rides a join or shuffle and the merge exchange carries only
-    ``partitions × nq × k`` id+double rows. No training, no full scan.
+    """Probe a prebuilt index: each query scores only the index rows of its
+    ``n_probe`` nearest cells (computed driver-side on the collected query
+    matrix — queries are the small, broadcastable side). The scorer is the
+    shared top-k scan (``similarity.py::_score_topk``) of
+    :func:`~stupidb_spark.operators.similarity.brute_force_topk`, with the
+    per-query cell-membership mask (:func:`_probe_mask`) instead of a
+    probe-pair join. No training, no full scan.
 
     Returns: query_id, neighbor_id, cosine_sim, rk (≤ k rows per query).
     """
-    from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
-
-    id_type = dict(indexed.dtypes)["neighbor_id"]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     # ONE collect: the same (ids, matrix) drives cell selection and the
     # scorer — the query side never touches Spark again.
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
-        return no_neighbors(indexed, out_schema, "cosine_sim", k)
-    cells = _probe_cells(Q, centroids, n_probe)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
-    # (nq, n_centroids) membership mask: does query j probe cell c?
-    probe_mask = np.zeros((len(q_ids), len(centroids)), dtype=bool)
-    for j, row in enumerate(cells):
-        probe_mask[j, row] = True
+        return no_neighbors(indexed, "neighbor_id", "cosine_sim", k)
+    probe_mask, probed = _probe_mask(Q, centroids, n_probe)
+    qnorms = _quant_norms(Q)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            B = np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
-            ids = pdf["neighbor_id"].to_numpy()
-            cell_v = pdf["cell"].to_numpy()
-            sims = _quant_sims(B, Q, qnorms)
-            frames = []
-            for j, qid in enumerate(q_ids):
-                mask = probe_mask[j, cell_v] & (ids != qid)
-                cid, csim = ids[mask], sims[mask, j]
-                order = np.lexsort((cid, -csim))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cid[order],
-                            "cosine_sim": csim[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def sims_in_probed_cells(pdf: pd.DataFrame):
+        sims = _quant_sims(_batch_vectors(pdf), Q, qnorms)
+        return sims, probe_mask[:, pdf["cell"].to_numpy()].T
 
-    # The probed cell set is known driver-side — filter it STATICALLY so a
-    # cell-partitioned index scans only probed partitions (partition pruning
-    # at plan time, not dynamic pruning at run time).
-    probed = sorted({int(c) for row in cells for c in row})
-    partials = indexed.filter(F.col("cell").isin(probed)).mapInPandas(
-        score, out_schema
+    return _score_topk(
+        indexed.filter(F.col("cell").isin(probed)),
+        q_ids,
+        k,
+        "cosine_sim",
+        sims_in_probed_cells,
     )
-    return rank_topk(partials, "cosine_sim", k)
 
 
 @dataclass
@@ -506,28 +489,6 @@ class RebalanceResult:
     split: dict[int, list[int]]
 
 
-def _local_lloyd(X: np.ndarray, k: int, iters: int) -> np.ndarray:
-    """Deterministic Lloyd on a driver-side sample — cosine assignment,
-    fixed iterations, POPULATION-PROPORTIONAL seeds (evenly spaced over the
-    id-sorted sample) rather than ivf_train's first-k. Rebalance exists
-    because one region of a cell piled up; first-k seeds all land among the
-    longest-tenured members (lowest ids), leaving the pile — typically the
-    newest, highest-id rows — to collapse into a single sub-centroid and
-    defeat the split. Evenly-spaced seeds give every population segment
-    representation proportional to its size, so the hot region gets seeds
-    inside it."""
-    Xn = _normalize(X)
-    centroids = X[np.linspace(0, len(X) - 1, k).astype(int)].copy()
-    for _ in range(iters):
-        C = _normalize(centroids)
-        assign = np.argmax(Xn @ C.T, axis=1)
-        for c in range(k):
-            members = X[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids
-
-
 def _cell_sample(
     indexed: DataFrame, cell: int, n_train: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -550,7 +511,7 @@ def _cell_sample(
     )
     ids = np.array([r.neighbor_id for r in rows])
     X = np.stack([np.array(r.b_vec, dtype=np.float64) for r in rows])
-    # id-sort so _local_lloyd's evenly-spaced seeds span the id range —
+    # id-sort so the rebalance's evenly-spaced seeds span the id range —
     # tenured lows and appended highs both get seeds in proportion
     order = np.argsort(ids)
     return ids[order], X[order]
@@ -617,7 +578,14 @@ def ivf_rebalance(
         n_sub = int(min(max_split, max(2, np.ceil(counts[c] / (target_ratio * mean)))))
         _, X = _cell_sample(idx.indexed, c, n_train)
         n_sub = min(n_sub, len(X))
-        sub = _local_lloyd(X, n_sub, iters)
+        # POPULATION-PROPORTIONAL seeds (evenly spaced over the id-sorted
+        # sample), not ivf_train's first k: rebalance exists because one
+        # region of the cell piled up, and first-k seeds all land among the
+        # longest-tenured (lowest-id) members, leaving the pile — typically
+        # the newest, highest-id rows — to collapse into one sub-centroid
+        # and defeat the split.
+        seeds = np.linspace(0, len(X) - 1, n_sub).astype(int)
+        sub = _cosine_lloyd(X, seeds, iters)
         ids = [c] + list(range(len(centroids), len(centroids) + n_sub - 1))
         centroids[c] = sub[0]
         centroids.extend(sub[1:])

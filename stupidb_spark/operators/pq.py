@@ -19,14 +19,15 @@ Same lifecycle split as IVF (train / encode / score), same driver-side
 discipline:
 
 - :func:`pq_train` fits codebooks on a bounded deterministic sample (the
-  ``n_train`` lowest-id vectors) — model size is m·k·(dim/m) floats,
-  independent of table size.
+  ``n_train`` lowest-id vectors, ``similarity.py::collect_train_matrix``) —
+  model size is m·k·(dim/m) floats, independent of table size.
 - :func:`pq_encode` is one map-only pass producing (id, code) — the only
-  thing that ever needs to be stored or scanned again.
-- :func:`pq_topk` embeds the query matrix AND the codebooks in a
-  ``mapInPandas`` scorer over the CODE table (the brute-force/IVF mask-scorer
-  shape): per Arrow batch, scores are one numpy gather+sum over the ADC
-  tables, batch-local top-k, ids-only merge exchange.
+  thing that ever needs to be stored or scanned again. :func:`_pq_codes` is
+  the one encoder; :func:`ivfpq_encode` uses it too.
+- :func:`pq_topk` is the ANN family's one top-k scan
+  (``similarity.py::_score_topk``) over the CODE table, with ADC scores:
+  per Arrow batch, one numpy gather+sum over the lookup tables
+  (:func:`_adc_tables`, :func:`_adc_sims`, shared with :func:`ivfpq_topk`).
 
 Approximation contract: PQ scores are approximate (each subvector snaps to
 its nearest centroid); recall@k against exact brute force is pinned in
@@ -46,44 +47,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.similarity import (
-    SPREAD_BYTES_PER_TASK,
+    _batch_vectors,
+    _score_topk,
+    base_scan,
     collect_query_matrix,
+    collect_train_matrix,
     no_neighbors,
-    rank_topk,
-    spread_small_scan,
 )
 
+# pq_train's sample size and Lloyd iterations; ivfpq_build trains its
+# codebooks with the same
+PQ_TRAIN_ROWS, PQ_ITERS = 2048, 8
 
-def pq_train(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 16,
-    k: int = 256,
-    iters: int = 8,
-    n_train: int = 2048,
-) -> np.ndarray:
-    """Fit per-subspace codebooks: (m, k, dim/m) centroid tensor.
 
-    Lloyd's k-means runs independently per subspace on the ``n_train``
-    lowest-id vectors, vectorized in numpy on the driver (the quantizer
-    needs a distribution sketch, not the data set — identical reasoning to
-    ``ivf_train``).
-    """
-    rows = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(n_train)
-        .collect()
-    )
-    if len(rows) < k:
+def _pq_codebooks(X: np.ndarray, m: int, k: int, iters: int) -> np.ndarray:
+    """Per-subspace L2 Lloyd's k-means on the training sample ``X``: seeds
+    are the first ``k`` rows, the update is the members' mean."""
+    if len(X) < k:
         raise ValueError(
-            f"pq_train needs at least k={k} training vectors; the table "
-            f"(capped at n_train={n_train}) yielded {len(rows)} — lower k "
-            "or train on more data"
+            f"pq_train needs at least k={k} training vectors; the sample "
+            f"yielded {len(X)} — lower k or train on more data"
         )
-    X = np.stack([np.array(r._v, dtype=np.float64) for r in rows])
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -107,6 +91,40 @@ def pq_train(
     return books
 
 
+def pq_train(
+    df: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    m: int = 16,
+    k: int = 256,
+    iters: int = PQ_ITERS,
+    n_train: int = PQ_TRAIN_ROWS,
+) -> np.ndarray:
+    """Fit per-subspace codebooks: (m, k, dim/m) centroid tensor.
+
+    Lloyd's k-means runs independently per subspace on the ``n_train``
+    lowest-id vectors, vectorized in numpy on the driver (the quantizer
+    needs a distribution sketch, not the data set — identical reasoning to
+    ``ivf_train``).
+    """
+    X = collect_train_matrix(df, id_col, vec_col, n_train)
+    return _pq_codebooks(X, m, k, iters)
+
+
+def _pq_codes(M: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(rows, m) int32 PQ codes of the vectors ``M``: per subspace, the id
+    of the nearest codebook centroid."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(M), m), dtype=np.int32)
+    for s in range(m):
+        Xs = M[:, s * dsub : (s + 1) * dsub]
+        # x² is row-constant, so argmin needs only -2x·c + c²
+        d2 = (books[s] ** 2).sum(axis=1)[None, :] - 2.0 * (Xs @ books[s].T)
+        codes[:, s] = np.argmin(d2, axis=1)
+    return codes
+
+
 def pq_encode(
     base: DataFrame,
     codebooks: np.ndarray,
@@ -117,31 +135,56 @@ def pq_encode(
     """Encode every vector to its per-subspace nearest-centroid ids — one
     map-only pass, output (neighbor_id, code array<int>). At scale THIS is
     the stored index table (16× smaller than the vectors at rest); write it
-    partitioned/bucketed like any fact."""
-    m, k, dsub = codebooks.shape
+    partitioned/bucketed like any fact. A NULL vector is not encoded."""
     id_type = dict(base.dtypes)[id_col]
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(M), m), dtype=np.int32)
-            for s in range(m):
-                Xs = M[:, s * dsub : (s + 1) * dsub]
-                # x² is row-constant, so argmin needs only -2x·c + c²
-                d2 = (codebooks[s] ** 2).sum(axis=1)[None, :] - 2.0 * (
-                    Xs @ codebooks[s].T
-                )
-                codes[:, s] = np.argmin(d2, axis=1)
+            codes = _pq_codes(_batch_vectors(pdf), codebooks)
             yield pd.DataFrame(
-                {"neighbor_id": pdf["_id"].to_numpy(), "code": list(codes)}
+                {"neighbor_id": pdf["neighbor_id"].to_numpy(), "code": list(codes)}
             )
 
-    return spread_small_scan(
-        base.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=SPREAD_BYTES_PER_TASK,
-    ).mapInPandas(encode, f"neighbor_id {id_type}, code array<int>")
+    return base_scan(base, id_col, vec_col).mapInPandas(
+        encode, f"neighbor_id {id_type}, code array<int>"
+    )
+
+
+def _adc_tables(
+    Q: np.ndarray, books: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-query ADC lookup tables ``luts[j, s, c]`` = <query j's subspace s,
+    centroid c>, the per-(subspace, centroid) ``||centroid||²`` that sums to
+    a code's reconstructed squared norm, and the query norms."""
+    m, _, dsub = books.shape
+    qnorms = np.linalg.norm(Q, axis=1)
+    qnorms[qnorms == 0] = 1.0
+    luts = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), m, dsub), books)
+    return luts, (books**2).sum(axis=2), qnorms
+
+
+def _adc_sims(
+    pdf: pd.DataFrame, tables: tuple, mask: np.ndarray | None = None
+) -> np.ndarray:
+    """(batch, nq) ADC scores of the batch's codes: per query, ``m`` table
+    gathers and a sum over the query norm times the code's reconstructed
+    norm. With a (batch, nq) ``mask`` only masked entries are computed."""
+    luts, cent_sq, qnorms = tables
+    C = np.stack(pdf["code"].to_numpy()).astype(np.int64)  # (batch, m)
+    sub_idx = np.arange(C.shape[1])
+    rec_norm = np.sqrt(cent_sq[sub_idx[None, :], C].sum(axis=1))
+    rec_norm[rec_norm == 0] = 1.0
+    # column-major, and integer rows under a mask: each query's scores are
+    # one contiguous column, and the mask is scanned once per query, so the
+    # masked IVF-PQ batch costs no more than scoring only its candidates
+    sims = np.empty((len(C), len(luts)), order="F")
+    for j in range(len(luts)):
+        rows = slice(None) if mask is None else np.flatnonzero(mask[:, j])
+        dots = luts[j][sub_idx[None, :], C[rows]].sum(axis=1)
+        sims[rows, j] = dots / (rec_norm[rows] * qnorms[j])
+    return sims
 
 
 def pq_topk(
@@ -157,59 +200,21 @@ def pq_topk(
     ever touching a base vector.
 
     Per query the driver precomputes an (m, k) table of dot products between
-    the query subvector and every centroid, normalized by the query norm and
-    the CODE's reconstructed norm; each Arrow batch of codes then scores as
-    ``m`` numpy gathers + a sum — no joins, ids-only merge exchange.
+    the query subvector and every centroid (:func:`_adc_tables`), normalized
+    by the query norm and the CODE's reconstructed norm; the shared top-k
+    scan (``similarity.py::_score_topk``) then scores each Arrow batch of
+    codes as ``m`` numpy gathers + a sum — no joins, ids-only merge
+    exchange.
 
     Returns: query_id, neighbor_id, pq_score, rk (≤ k rows per query).
     """
-    m, kc, dsub = codebooks.shape
-    id_type = dict(codes.dtypes)["neighbor_id"]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
-        return no_neighbors(codes, out_schema, "pq_score", k)
-    qnorms = np.linalg.norm(Q, axis=1)
-    qnorms[qnorms == 0] = 1.0
-    # luts[j, s, c] = <query_j subspace s, centroid c>
-    luts = np.einsum(
-        "qsd,scd->qsc", Q.reshape(len(Q), m, dsub), codebooks
+        return no_neighbors(codes, "neighbor_id", "pq_score", k)
+    tables = _adc_tables(Q, codebooks)
+    return _score_topk(
+        codes, q_ids, k, "pq_score", lambda pdf: (_adc_sims(pdf, tables), None)
     )
-    # reconstructed-norm contribution per (s, c): ||centroid||^2
-    cent_sq = (codebooks**2).sum(axis=2)  # (m, kc)
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["code"].to_numpy()).astype(np.int64)  # (batch, m)
-            ids = pdf["neighbor_id"].to_numpy()
-            sub_idx = np.arange(m)
-            # reconstructed norm of each code (exact over centroids)
-            rec_sq = cent_sq[sub_idx[None, :], C].sum(axis=1)
-            rec_norm = np.sqrt(rec_sq)
-            rec_norm[rec_norm == 0] = 1.0
-            frames = []
-            for j, qid in enumerate(q_ids):
-                dots = luts[j][sub_idx[None, :], C].sum(axis=1)
-                sims = dots / (rec_norm * qnorms[j])
-                mask = ids != qid
-                cid, csim = ids[mask], sims[mask]
-                order = np.lexsort((cid, -csim))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cid[order],
-                            "pq_score": csim[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    partials = codes.mapInPandas(score, out_schema)
-    return rank_topk(partials, "pq_score", k)
 
 
 def pq_search(
@@ -245,14 +250,18 @@ def ivfpq_build(
     m: int = 16,
     k_codes: int = 256,
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """Train both quantizers (coarse cells + PQ codebooks, each on a bounded
-    driver-side sample) and produce the (id, cell, code) table in ONE
+    """Train both quantizers (coarse cells + PQ codebooks) from ONE bounded
+    driver-side sample and produce the (id, cell, code) table in ONE
     map-only pass — cell assignment and subspace encoding share the same
-    Arrow batch. Returns (cell_centroids, codebooks, table)."""
-    from stupidb_spark.operators.ivf import ivf_train
+    Arrow batch. Returns (cell_centroids, codebooks, table), equal to
+    ``ivf_train`` and :func:`pq_train` at their defaults: both samples are
+    lowest-id prefixes, so the larger one holds the smaller."""
+    from stupidb_spark.operators.ivf import IVF_ITERS, IVF_TRAIN_ROWS, _cosine_lloyd
 
-    centroids = ivf_train(base, id_col=id_col, vec_col=vec_col, k=n_cells)
-    books = pq_train(base, id_col=id_col, vec_col=vec_col, m=m, k=k_codes)
+    X = collect_train_matrix(base, id_col, vec_col, max(IVF_TRAIN_ROWS, PQ_TRAIN_ROWS))
+    cells = X[:IVF_TRAIN_ROWS]
+    centroids = _cosine_lloyd(cells, np.arange(min(n_cells, len(cells))), IVF_ITERS)
+    books = _pq_codebooks(X[:PQ_TRAIN_ROWS], m, k_codes, PQ_ITERS)
     table = ivfpq_encode(base, centroids, books, id_col=id_col, vec_col=vec_col)
     return centroids, books, table
 
@@ -268,8 +277,8 @@ def ivfpq_encode(
     """Encode ``vectors`` against FROZEN quantizers: one map-only pass where
     cell assignment and subspace encoding share the same Arrow batch,
     yielding (neighbor_id, cell, code). Used by :func:`ivfpq_build` for the
-    initial table and by :func:`ivfpq_append` for deltas."""
-    mm, kk, dsub = books.shape
+    initial table and by :func:`ivfpq_append` for deltas. A NULL vector is
+    not encoded."""
     Cn = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )
@@ -279,26 +288,17 @@ def ivfpq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            M = _batch_vectors(pdf)
             Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(Mn @ Cn.T, axis=1).astype(np.int32)
-            codes = np.empty((len(M), mm), dtype=np.int32)
-            for s in range(mm):
-                Xs = M[:, s * dsub : (s + 1) * dsub]
-                d2 = (books[s] ** 2).sum(axis=1)[None, :] - 2.0 * (Xs @ books[s].T)
-                codes[:, s] = np.argmin(d2, axis=1)
             yield pd.DataFrame(
                 {
-                    "neighbor_id": pdf["_id"].to_numpy(),
-                    "cell": cells,
-                    "code": list(codes),
+                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
+                    "cell": np.argmax(Mn @ Cn.T, axis=1).astype(np.int32),
+                    "code": list(_pq_codes(M, books)),
                 }
             )
 
-    return spread_small_scan(
-        vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        bytes_per_task=SPREAD_BYTES_PER_TASK,
-    ).mapInPandas(enc, f"neighbor_id {id_type}, cell int, code array<int>")
+    return base_scan(vectors, id_col, vec_col).mapInPandas(enc, f"neighbor_id {id_type}, cell int, code array<int>")
 
 
 def ivfpq_append(
@@ -339,16 +339,15 @@ def ivfpq_topk(
     k_codes: int = 256,
 ) -> DataFrame:
     """IVF-PQ top-k: statically prune to the query set's probed cells, then
-    ADC-score codes with the per-query cell-membership mask — the IVF probe
-    shape with PQ lookup tables instead of float dot products. Recall
-    compounds both approximations; pinned in tests."""
-    from stupidb_spark.operators.ivf import _probe_cells
+    ADC-score codes with the per-query cell-membership mask — the shared
+    top-k scan (``similarity.py::_score_topk``) with the IVF probe mask
+    (``ivf.py::_probe_mask``) and the PQ lookup tables instead of float dot
+    products. Recall compounds both approximations; pinned in tests."""
+    from stupidb_spark.operators.ivf import _probe_mask
 
-    id_type = dict(base.dtypes)[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, pq_score double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
-        return no_neighbors(base, out_schema, "pq_score", k)
+        return no_neighbors(base, id_col, "pq_score", k)
     centroids, books, table = ivfpq_build(
         base,
         id_col=id_col,
@@ -357,49 +356,17 @@ def ivfpq_topk(
         m=m,
         k_codes=k_codes,
     )
-    mm, kk, dsub = books.shape
-    cells = _probe_cells(Q, centroids, n_probe)
-    probe_mask = np.zeros((len(q_ids), len(centroids)), dtype=bool)
-    for j, row in enumerate(cells):
-        probe_mask[j, row] = True
-    qnorms = np.linalg.norm(Q, axis=1)
-    qnorms[qnorms == 0] = 1.0
-    luts = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), mm, dsub), books)
-    cent_sq = (books**2).sum(axis=2)
+    probe_mask, probed = _probe_mask(Q, centroids, n_probe)
+    tables = _adc_tables(Q, books)
 
-    def score(batches):
-        sub_idx = np.arange(mm)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["code"].to_numpy()).astype(np.int64)
-            ids = pdf["neighbor_id"].to_numpy()
-            cell_v = pdf["cell"].to_numpy()
-            rec_norm = np.sqrt(cent_sq[sub_idx[None, :], C].sum(axis=1))
-            rec_norm[rec_norm == 0] = 1.0
-            frames = []
-            for j, qid in enumerate(q_ids):
-                mask = probe_mask[j, cell_v] & (ids != qid)
-                if not mask.any():
-                    continue
-                dots = luts[j][sub_idx[None, :], C[mask]].sum(axis=1)
-                sims = dots / (rec_norm[mask] * qnorms[j])
-                cid = ids[mask]
-                order = np.lexsort((cid, -sims))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cid[order],
-                            "pq_score": sims[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def adc_in_probed_cells(pdf: pd.DataFrame):
+        mask = probe_mask[:, pdf["cell"].to_numpy()].T
+        return _adc_sims(pdf, tables, mask), mask
 
-    probed = sorted({int(c) for row in cells for c in row})
-    partials = table.filter(F.col("cell").isin(probed)).mapInPandas(
-        score, out_schema
+    return _score_topk(
+        table.filter(F.col("cell").isin(probed)),
+        q_ids,
+        k,
+        "pq_score",
+        adc_in_probed_cells,
     )
-    return rank_topk(partials, "pq_score", k)

@@ -1,18 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
-Beyond-reference surface (SURVEY.md §7). Two paths:
+Beyond-reference surface (SURVEY.md §7). Two paths here, three more in
+``operators/ivf.py`` and ``operators/pq.py``:
 
-- :func:`brute_force_topk` — exact cosine top-k. The query set is broadcast,
-  so the base table is scanned once with no shuffle of the big side; top-k
-  is a per-query window. This is the correctness baseline and is already the
-  right plan when |queries| is small (the common batch-retrieval shape).
-- :func:`lsh_topk` — random-hyperplane LSH bucketing: each vector lands in
-  one of 2^n_planes sign-buckets; queries probe only their own bucket. At
-  100 TB this turns a full scan per query into a bucket-local scan; recall
-  is tunable via n_planes / multi-probe. Hyperplanes are deterministic
-  (seeded), data-independent literals — no fitting step, no driver collect.
+- :func:`brute_force_topk` — exact cosine top-k over every base vector.
+  This is the correctness baseline and already the right plan when
+  |queries| is small (the common batch-retrieval shape).
+- :func:`lsh_topk` — multi-table random-hyperplane LSH: a query scores only
+  the vectors that share one of its sign-buckets. Hyperplanes are
+  deterministic (seeded), data-independent literals — no fitting step.
 
-Pair scoring is a vectorized numpy pandas UDF over QUANTIZED dot products:
+All five ANN operators share one scoring core. The query matrix is
+collected (:func:`collect_query_matrix`) and embedded in one
+``mapInPandas`` scan, :func:`_score_topk`, which is the only per-batch
+top-k loop of the family: each operator supplies only a per-batch
+``(sims, mask)`` — its similarity arithmetic and its candidate rule — and
+the scan keeps each query's batch-local top-k and merges the partials in
+:func:`rank_topk`. The base is read through :func:`base_scan` and any
+quantizer trains on :func:`collect_train_matrix`; both skip NULL vectors,
+the query side's rule.
+
+Pair scoring is a vectorized numpy pass over QUANTIZED dot products:
 each elementwise product is snapped to a fixed 2^-40 integer grid and summed
 in int64 — exact, therefore ORDER-INDEPENDENT, therefore free to vectorize
 (numpy's pairwise/SIMD summation and DuckDB's sequential fold produce the
@@ -24,6 +32,7 @@ one-offs (e.g. bucketing literals).
 from __future__ import annotations
 
 import random
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -147,6 +156,43 @@ def collect_query_matrix(
     return ids, Q
 
 
+def collect_train_matrix(
+    df: DataFrame, id_col: str, vec_col: str, n_train: int
+) -> np.ndarray:
+    """Driver-side training sample of an ANN quantizer: the vectors of the
+    ``n_train`` lowest ids, id-sorted — one bounded TakeOrdered collect, so
+    training cost is independent of table size. A NULL vector matches
+    nothing (the :func:`collect_query_matrix` rule), so it is not sampled."""
+    rows = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .orderBy("_id")
+        .limit(n_train)
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"no non-NULL {vec_col} vector to train on")
+    return np.array([r._v for r in rows], dtype=np.float64)
+
+
+def base_scan(base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The base side of an ANN operator as (neighbor_id, b_vec) rows. A NULL
+    vector matches nothing (the :func:`collect_query_matrix` rule), so its
+    row is dropped.
+
+    The scan is spread because a small base file arrives as one partition
+    and would put the whole scoring loop on one core; at scale the scan is
+    already wide. The width is volume-derived (``SPREAD_BYTES_PER_TASK``):
+    the per-batch numpy is light per byte, so core-count width on a
+    kilobyte-scale scan only multiplies fixed task overhead."""
+    return spread_small_scan(
+        base.filter(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
+        ),
+        bytes_per_task=SPREAD_BYTES_PER_TASK,
+    )
+
+
 def rank_topk(partials: DataFrame, score_col: str, k: int) -> DataFrame:
     """Merge per-batch candidates into the k best per query, ranked by
     (score desc, neighbor_id) for a deterministic total order. Any row in a
@@ -161,12 +207,73 @@ def rank_topk(partials: DataFrame, score_col: str, k: int) -> DataFrame:
     )
 
 
-def no_neighbors(
-    df: DataFrame, out_schema: str, score_col: str, k: int
-) -> DataFrame:
+def _topk_schema(df: DataFrame, id_col: str, score_col: str) -> str:
+    id_type = dict(df.dtypes)[id_col]
+    return f"query_id {id_type}, neighbor_id {id_type}, {score_col} double"
+
+
+def no_neighbors(df: DataFrame, id_col: str, score_col: str, k: int) -> DataFrame:
     """The result of a search with no (non-NULL) query vectors: empty, with
     the same schema a non-empty search returns, and no scan of the base."""
-    return rank_topk(df.sparkSession.createDataFrame([], out_schema), score_col, k)
+    schema = _topk_schema(df, id_col, score_col)
+    return rank_topk(df.sparkSession.createDataFrame([], schema), score_col, k)
+
+
+def _score_topk(
+    rows: DataFrame,
+    q_ids: np.ndarray,
+    k: int,
+    score_col: str,
+    batch_scores: Callable[[pd.DataFrame], tuple[np.ndarray, np.ndarray | None]],
+) -> DataFrame:
+    """The ANN family's one top-k scan: ``rows`` (``neighbor_id`` plus what
+    ``batch_scores`` reads) is scanned once with the queries embedded.
+
+    Per Arrow batch, ``batch_scores(pdf)`` returns ``(sims, mask)``: the
+    (batch, nq) scores and the (batch, nq) candidate mask, or None when
+    every row is a candidate (scores outside the mask are never read). A
+    query never matches its own id. Each query keeps its batch-local top-k
+    by (score desc, id asc), so the merge exchange carries only
+    ``partitions × nq × k`` id+score rows and no vector rides a join or a
+    shuffle; :func:`rank_topk` merges the partials exactly."""
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["neighbor_id"].to_numpy()
+            sims, mask = batch_scores(pdf)
+            frames = []
+            for j, qid in enumerate(q_ids):
+                keep = ids != qid
+                if mask is not None:
+                    keep &= mask[:, j]
+                cid, csim = ids[keep], sims[keep, j]
+                # lexsort keys are last-key-primary
+                order = np.lexsort((cid, -csim))[:k]
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": qid,
+                            "neighbor_id": cid[order],
+                            score_col: csim[order],
+                        }
+                    )
+                )
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    out_schema = _topk_schema(rows, "neighbor_id", score_col)
+    return rank_topk(rows.mapInPandas(score, out_schema), score_col, k)
+
+
+def _quant_norms(M: np.ndarray) -> np.ndarray:
+    """Row norms on the quantized grid (the norms :func:`_quant_sims` uses)."""
+    return np.sqrt(_qdot(M, M).astype(np.float64) / QUANT_SCALE)
+
+
+def _batch_vectors(pdf: pd.DataFrame) -> np.ndarray:
+    return np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
 
 
 def _quant_sims(B: np.ndarray, Q: np.ndarray, qnorms: np.ndarray) -> np.ndarray:
@@ -183,7 +290,7 @@ def _quant_sims(B: np.ndarray, Q: np.ndarray, qnorms: np.ndarray) -> np.ndarray:
     bit-identical to the int64 construction the SQL oracles mirror while
     skipping two full-tensor dtype conversions (pinned in
     tests/test_similarity.py)."""
-    bnorms = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
+    bnorms = _quant_norms(B)
     out = np.empty((len(B), len(Q)))
     chunk = max(1, int(2_000_000 / (len(B) * B.shape[1] + 1)) or 1)
     for s in range(0, len(Q), chunk):
@@ -204,59 +311,23 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
-    Scale shape: the query matrix is collected (small side — see
-    :func:`collect_query_matrix`) and embedded in a ``mapInPandas`` scorer,
-    so the base table is scanned ONCE with no join and no array shuffle —
-    each Arrow batch emits only its per-query top-k candidate ids
-    (``partitions × nq × k`` id+double rows), and a final window merges
-    partials. Any row in the global top-k is in its batch's top-k, so the
-    merge is exact.
+    Scale shape: the base table is scanned ONCE by :func:`_score_topk`
+    with no join and no array shuffle; every base vector is a candidate.
 
     Returns: query_id, neighbor_id, cosine_sim — k rows per query, ranked by
     (sim desc, neighbor_id) for a deterministic total order.
     """
-    id_type = dict(base.dtypes)[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
-        return no_neighbors(base, out_schema, "cosine_sim", k)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            B = np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
-            ids = pdf["neighbor_id"].to_numpy()
-            sims = _quant_sims(B, Q, qnorms)
-            frames = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cid, csim = ids[mask], col[mask]
-                # batch-local top-k by (sim desc, id asc): lexsort keys are
-                # last-key-primary
-                order = np.lexsort((cid, -csim))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cid[order],
-                            "cosine_sim": csim[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    # spread: a small base file arrives as one partition and would put the
-    # whole scoring loop on one core (at scale the scan is already wide)
-    b = spread_small_scan(
-        base.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")),
-        bytes_per_task=SPREAD_BYTES_PER_TASK,
+        return no_neighbors(base, id_col, "cosine_sim", k)
+    qnorms = _quant_norms(Q)
+    return _score_topk(
+        base_scan(base, id_col, vec_col),
+        q_ids,
+        k,
+        "cosine_sim",
+        lambda pdf: (_quant_sims(_batch_vectors(pdf), Q, qnorms), None),
     )
-    partials = b.mapInPandas(score, out_schema)
-    return rank_topk(partials, "cosine_sim", k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -297,22 +368,18 @@ def lsh_topk(
     1 − (1 − (1 − θ/π)^n_planes)^n_tables — at cosine 0.5 with 4×8 ≈ 0.83,
     versus 0.2 for a single table (measured 0.12 on the fixture).
 
-    Scale shape: the same embedded-matrix ``mapInPandas`` scorer as
-    :func:`brute_force_topk` / the IVF probe — each Arrow batch computes its
-    vectors' per-table buckets with one matmul, compares them against the
-    (driver-precomputed) query bucket matrix for the candidate mask, scores
-    masked candidates, and emits batch-local top-k. The base is scanned
-    once; no candidate join, no dedup shuffle, and the single merge exchange
-    carries only ``partitions × nq × k`` id+double rows. (An earlier
-    bucket-equi-join formulation shipped a vector array per candidate and
-    ran a dedup + join + window pipeline — measured ~2.5× slower at sf0.1.)
+    Scale shape: the :func:`_score_topk` scan of :func:`brute_force_topk`,
+    with the shared-bucket candidate mask. Each Arrow batch computes its
+    vectors' per-table buckets with one matmul and compares them against
+    the (driver-precomputed) query bucket matrix. The base is scanned once;
+    no candidate join, no dedup shuffle. (An earlier bucket-equi-join
+    formulation shipped a vector array per candidate and ran a dedup +
+    join + window pipeline — measured ~2.5× slower at sf0.1.)
     """
-    id_type = dict(base.dtypes)[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
-        return no_neighbors(base, out_schema, "cosine_sim", k)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
+        return no_neighbors(base, id_col, "cosine_sim", k)
+    qnorms = _quant_norms(Q)
 
     planes_rows = []
     for t in range(n_tables):
@@ -326,39 +393,15 @@ def lsh_topk(
 
     q_buckets = buckets_of(Q)  # (nq, n_tables)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            B = np.stack(pdf["b_vec"].to_numpy()).astype(np.float64)
-            ids = pdf["neighbor_id"].to_numpy()
-            b_buckets = buckets_of(B)  # (batch, n_tables)
-            # candidate iff the pair shares a bucket in >= 1 table
-            shared = (b_buckets[:, None, :] == q_buckets[None, :, :]).any(axis=2)
-            sims = _quant_sims(B, Q, qnorms)
-            frames = []
-            for j, qid in enumerate(q_ids):
-                mask = shared[:, j] & (ids != qid)
-                cid, csim = ids[mask], sims[mask, j]
-                order = np.lexsort((cid, -csim))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cid[order],
-                            "cosine_sim": csim[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def sims_in_shared_buckets(pdf: pd.DataFrame):
+        B = _batch_vectors(pdf)
+        # candidate iff the pair shares a bucket in >= 1 table
+        shared = (buckets_of(B)[:, None, :] == q_buckets[None, :, :]).any(axis=2)
+        return _quant_sims(B, Q, qnorms), shared
 
-    b = spread_small_scan(
-        base.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")),
-        bytes_per_task=SPREAD_BYTES_PER_TASK,
+    return _score_topk(
+        base_scan(base, id_col, vec_col), q_ids, k, "cosine_sim", sims_in_shared_buckets
     )
-    partials = b.mapInPandas(score, out_schema)
-    return rank_topk(partials, "cosine_sim", k)
 
 
 def norm_guard(df: DataFrame, what: str) -> DataFrame:

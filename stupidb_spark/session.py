@@ -117,8 +117,8 @@ def configure_existing(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # events.parquet is physically timestamp[us]; read natively. Only
-        # load_table's footer-sniffed ns fallback may flip nanosAsLong on
+        # events.parquet is physically timestamp[us]; read natively. A
+        # TIMESTAMP(NANOS) file is read with a per-read LongType schema
         # (sources/catalog.py) — a blanket "true" here would corrupt a µs
         # fixture read as raw longs.
         "spark.sql.legacy.parquet.nanosAsLong": "false",

@@ -83,9 +83,10 @@ FIXTURE_SCHEMAS: dict[str, StructType] = {
     # events.ts is physically timestamp[us] in the current fixtures, which
     # Spark's vectorized reader handles natively as TimestampType. If a
     # future regeneration writes TIMESTAMP(NANOS) instead (which the
-    # vectorized reader rejects), read_fixture sniffs the footer and falls
-    # back to the legacy nanosAsLong read + ns→µs truncation (what DuckDB
-    # does).
+    # vectorized reader rejects as TimestampType), read_fixture sniffs the
+    # footer, reads ts with a LongType schema as raw nanos and truncates to
+    # µs (what DuckDB does). The per-read schema is enough; no session
+    # conf changes.
     "events": _st(
         ("event_id", LongType()),
         ("ts", TimestampType()),
@@ -120,7 +121,7 @@ def parquet_ts_is_nanos(path: str) -> bool:
     Checks the parquet *physical+logical* type, not pyarrow's arrow-mapped
     type: Spark-written INT96 timestamps also map to arrow ``timestamp[ns]``
     but Spark reads INT96 natively as TimestampType — only a true INT64
-    nanosecond column needs the legacy ``nanosAsLong`` fallback.
+    nanosecond column needs the raw-long read of :func:`read_fixture`.
     """
     import pyarrow.parquet as pq
 
@@ -173,16 +174,18 @@ def read_fixture(
 
     ``events.ts`` is read natively when it is timestamp[us]. A
     TIMESTAMP(NANOS) file, which Spark's vectorized reader rejects as
-    TimestampType, is read as raw nanos and truncated to µs (DuckDB's ns→µs
-    cast). The footer is sniffed on every call — one local metadata read —
-    so a file rewritten in place between reads is read as it now is.
+    TimestampType, is read with ``ts`` pinned to LongType — raw nanos —
+    and truncated to µs (DuckDB's ns→µs cast). The schema is per read, so
+    no session conf changes and a later schema-less read of another NANOS
+    file still fails as Spark's default reader does. The footer is sniffed
+    on every call — one local metadata read — so a file rewritten in place
+    between reads is read as it now is.
     """
     from pyspark.sql import functions as F
 
     schema = FIXTURE_SCHEMAS[name]
     nanos = name == "events" and parquet_ts_is_nanos(_first_parquet_file(path))
     if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         schema = StructType(
             [
                 StructField(f.name, LongType() if f.name == "ts" else f.dataType, True)

@@ -2,8 +2,8 @@
 through ``streaming/events.py::run_stream``, no code builds a per-call
 session whose conf and listeners outlive the query, every session is
 built by ``session.get_session``, no module memoizes relations across
-calls, and MinHash band buckets and token n-grams are each built in one
-place."""
+calls, and MinHash band buckets, token n-grams and ANN top-k scoring are
+each built in one place."""
 
 from __future__ import annotations
 
@@ -20,6 +20,7 @@ NEW_SESSION = "new" + "Session("
 BUILDER = "SparkSession" + ".builder"
 PERSISTS = (".per" + "sist(", ".ca" + "che()", "unper" + "sist")
 MODULE_CACHE = re.compile(r"_\w*CA" + "CHE")
+ANN_MODULES = [PKG / "operators" / f"{name}.py" for name in ("similarity", "ivf", "pq")]
 
 
 def test_write_stream_only_inside_run_stream():
@@ -141,3 +142,18 @@ def test_one_ngram_construction():
         for node in _calls(ast.parse(path.read_text()), "lead")
     ]
     assert leads == []
+
+
+def test_one_topk_scorer():
+    """Brute force, LSH, IVF, PQ and IVF-PQ share one per-batch top-k loop,
+    ``operators/similarity.py::_score_topk``: the only ``lexsort`` call in
+    their modules. A rebalance fits its sub-centroids with the one cosine
+    Lloyd, so no ``_local_lloyd`` is left."""
+    sites = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path in ANN_MODULES
+        for node in _calls(ast.parse(path.read_text()), "lexsort")
+    ]
+    assert len(sites) == 1, sites
+    assert sites[0].startswith("stupidb_spark/operators/similarity.py:"), sites
+    assert not [p for p in PKG.rglob("*.py") if "_local_lloyd" in p.read_text()]

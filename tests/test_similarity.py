@@ -927,3 +927,40 @@ def test_ann_operators_skip_null_and_empty_query_sets(spark, op):
         empty = search(no_queries)
         assert empty.schema == expected.schema
         assert empty.collect() == []
+
+
+@pytest.mark.parametrize(
+    "op", ["brute_force_topk", "lsh_topk", "ivf_probe", "pq_topk", "ivfpq_topk"]
+)
+def test_ann_operators_skip_null_base_vectors(spark, op):
+    """The query side's rule on the base side: a base row whose vector is
+    NULL matches nothing, so adding one leaves every result unchanged —
+    neither the shared base scan nor the shared training sample raises."""
+    emb = _emb(spark).select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < 3)
+    expected = _ann_search(op, emb)(queries)
+    null_row = spark.createDataFrame([(99_999, None)], emb.schema)
+    got = _ann_search(op, emb.unionByName(null_row))(queries)
+    assert sorted(got.collect()) == sorted(expected.collect())
+
+
+def test_ivfpq_build_trains_from_one_sample(spark):
+    """IVF-PQ trains both quantizers from one training scan: the build runs
+    exactly one Spark job, and its cells and codebooks equal ivf_train's
+    and pq_train's bit for bit."""
+    import uuid
+
+    from stupidb_spark.operators.ivf import ivf_train
+    from stupidb_spark.operators.pq import ivfpq_build, pq_train
+
+    emb = _emb(spark)
+    sc = spark.sparkContext
+    group = f"ivfpq-build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "ivfpq_build")
+    try:
+        centroids, books, _ = ivfpq_build(emb)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert centroids.tobytes() == ivf_train(emb).tobytes()
+    assert books.tobytes() == pq_train(emb).tobytes()

@@ -209,3 +209,24 @@ def test_events_rewritten_in_place_reread_as_written(spark, outdir):
     write_events_parquet(src, path, nanos=True)
     assert parquet_ts_is_nanos(str(path))
     assert sorted(load_table(spark, str(outdir), "events").collect()) == expected
+
+
+def test_nanos_events_read_leaves_session_conf(spark, outdir):
+    """A TIMESTAMP(NANOS) events read is local to that read: afterwards the
+    session's nanosAsLong conf is unchanged, and a schema-less read of
+    another NANOS file still fails as Spark's default reader does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    src = load_table(spark, SF_DIR, "events").filter(F.col("event_id") < 300)
+    write_events_parquet(src, outdir / "events.parquet", nanos=True)
+    got = load_table(spark, str(outdir), "events").collect()
+    assert sorted(got) == sorted(src.collect())
+    assert spark.conf.get(key) == before
+    other = outdir / "t_only.parquet"
+    t = pa.array([1_000_000_123], pa.timestamp("ns"))
+    pq.write_table(pa.table({"t": t}), str(other), version="2.6")
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        spark.read.parquet(str(other)).collect()
