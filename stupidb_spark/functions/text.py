@@ -140,17 +140,6 @@ def fingerprint_rolling(c: ColumnLike) -> Column:
     )
 
 
-def rolling_hash_py(text: str) -> int:
-    """Pure-Python reference for :func:`fingerprint_rolling` (test oracle)."""
-    import re
-
-    norm = re.sub(r"\s+", " ", text.lower()).strip()
-    acc = 0
-    for ch in norm:
-        acc = (acc * 31 + ord(ch)) % _ROLLING_MOD
-    return acc
-
-
 # PII regexes — deliberately the common Java-regex/RE2 subset so the Spark
 # expression and the DuckDB oracle compile the same pattern text. Redaction
 # order matters: emails first (their domains contain dots that the IPv4

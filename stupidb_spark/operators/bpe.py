@@ -52,7 +52,8 @@ Determinism: pair selection orders by ``(count DESC, left ASC, right
 ASC)`` — a total order — and every downstream step is a deterministic
 function of the selected rules, so the merge sequence is reproducible
 run-to-run, partitioning-independent, and exactly replicated by the pure
-Python mirror (:func:`bpe_train_reference`) the tests compare against.
+Python mirror (``tests/mirrors.py::bpe_train_reference``) the tests compare
+against.
 """
 
 from __future__ import annotations
@@ -249,8 +250,8 @@ def bpe_train(
     ~0.7 s/round driver latency floor (SCALE.md round-9) across up to
     ``max_batch_size`` merges. The policy is deterministic driver
     arithmetic on the selected batch itself, replicated exactly by
-    :func:`bpe_train_reference` — merge-sequence differentials hold at any
-    (batch_size, adaptive) setting.
+    ``tests/mirrors.py::bpe_train_reference`` — merge-sequence differentials
+    hold at any (batch_size, adaptive) setting.
 
     Default DECISION (round 11, measured): ``adaptive_batch`` stays
     ``False`` because the library default ``batch_size=1`` is classic
@@ -462,71 +463,6 @@ def bpe_encode(
         )
 
     return df.withColumn(out_col, enc(F.col(text_col)))
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python mirror — test-support code (the differential in
-# tests/test_bpe.py); lives here so the two implementations' selection and
-# application rules stay side by side.
-# ---------------------------------------------------------------------------
-
-
-def bpe_train_reference(
-    texts: list[str],
-    *,
-    n_merges: int = 64,
-    batch_size: int = 1,
-    adaptive_batch: bool = False,
-    max_batch_size: int = 256,
-    min_pair_count: int = 2,
-) -> tuple[list[BpeMerge], dict[str, list[str]]]:
-    """Driver-side mirror of :func:`bpe_train`: identical tokenization,
-    counting, ``(count DESC, left, right)`` selection order, candidate
-    cutoff, disjoint-batch rule, adaptive-cap policy, and left-to-right
-    fold application. Returns ``(merges, final word→symbols state)``."""
-    counts: dict[str, int] = {}
-    for t in texts:
-        for w in _WORD_RE.findall((t or "").lower()):
-            counts[w] = counts.get(w, 0) + 1
-    state = {w: list(w) + [END_OF_WORD] for w in counts}
-
-    merges: list[BpeMerge] = []
-    cap = batch_size
-    while len(merges) < n_merges:
-        collect_k = max(16, _CANDIDATES_PER_BATCH * cap)
-        pair_counts: dict[tuple[str, str], int] = {}
-        for w, syms in state.items():
-            c = counts[w]
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + c
-        top = sorted(
-            pair_counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )[:collect_k]
-        request = min(cap, n_merges - len(merges))
-        batch = _select_batch(
-            [{"a": a, "b": b, "c": c} for (a, b), c in top],
-            batch_size=request,
-            min_pair_count=min_pair_count,
-        )
-        if not batch:
-            break
-        cap = _next_batch_cap(
-            cap, len(batch), request, adaptive_batch, batch_size, max_batch_size
-        )
-        for a, b, merged, c in batch:
-            merges.append(BpeMerge(len(merges), a, b, merged, c))
-        rules = {(a, b): m for a, b, m, _ in batch}
-        for w, syms in state.items():
-            acc: list[str] = []
-            for s in syms:
-                m = rules.get((acc[-1], s)) if acc else None
-                if m is not None:
-                    acc[-1] = m
-                else:
-                    acc.append(s)
-            state[w] = acc
-    return merges, state
 
 
 def save_bpe_merges(

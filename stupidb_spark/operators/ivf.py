@@ -29,10 +29,21 @@ indexes from its inputs, so a result never outlives the data it was built
 from. Reuse across calls goes through the durable index table
 (:func:`save_ivf_index` / :func:`load_ivf_index`).
 
+One cell assignment serves the whole embedding family:
+:func:`_nearest_cells` gives each vector its ``n`` most cosine-similar
+centroids, ties to the lowest cell, in float64 or on the quantized grid.
+Lloyd, indexing, probing, rebalancing, refinement, the kNN join's probe,
+IVF-PQ encoding and SemDeDup all call it (the Arrow form is
+:func:`_assign_udf`), so a vector lands in the same cell whichever
+operator asks. ``tests/test_one_stream_runner.py::test_one_cell_assignment``
+pins it.
+
 Deterministic: the training sample is the ``n_train`` lowest-id vectors
 (``similarity.py::collect_train_matrix``), seeds are the first ``k`` of
 those, iteration count is fixed — same inputs, same index. The one cosine
-Lloyd (:func:`_cosine_lloyd`) also fits the sub-centroids of a rebalance.
+Lloyd (:func:`_cosine_lloyd`) also fits the sub-centroids of a rebalance,
+and :func:`_refine_stats` is the one corpus Lloyd pass of
+:func:`ivf_refine` and the ``emb_kmeans_refine`` query.
 """
 
 from __future__ import annotations
@@ -46,7 +57,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.similarity import (
+    QUANT_SCALE,
     _batch_vectors,
+    _qdot,
     _quant_norms,
     _quant_sims,
     _score_topk,
@@ -68,44 +81,75 @@ def _normalize(M: np.ndarray) -> np.ndarray:
     return M / norms
 
 
-def _assign_udf(centroids: np.ndarray):
-    """cluster id of each vector = argmax cosine vs centroid matrix."""
-    C = _normalize(centroids.astype(np.float64))
+def _nearest_cells(
+    M: np.ndarray, centroids: np.ndarray, n: int = 1, *, assign: str = "float"
+) -> np.ndarray:
+    """The family's one cell assignment: the (rows, n) ids of each row's
+    ``n`` most cosine-similar centroids, nearest first, ties to the lowest
+    cell (``argmax``'s first max; a stable sort when ``n > 1``).
+
+    ``assign="float"`` compares the normalized rows with the normalized
+    centroids in one float64 matmul (fastest). ``assign="quantized"`` puts
+    each (row, centroid) cosine on the quantized-dot grid, the exact
+    ``sql_pair_cosine`` construction: a float matmul depends on summation
+    order, so near-ties can flip across engines, while the grid makes the
+    assignment, and everything downstream of it, DuckDB-replayable."""
+    C = np.asarray(centroids, dtype=np.float64)
+    if assign == "float":
+        # the float64 copy stays a temporary: binding it to a name measured
+        # 2.4 vs 2.0 ms on a 2000×64 batch at 64 cells (the matmul output
+        # can no longer reuse its memory)
+        sims = _normalize(M.astype(np.float64)) @ _normalize(C).T
+    elif assign == "quantized":
+        # a per-centroid loop, not _quant_sims: on a 2000×64 batch against
+        # 64 centroids _quant_sims measured 60 ms, this loop 31 ms (4-core x86)
+        M = M.astype(np.float64)
+        nm, cn = _quant_norms(M), _quant_norms(C)
+        sims = np.empty((len(M), len(C)))
+        for j in range(len(C)):
+            d = (
+                _qdot(M, np.broadcast_to(C[j], M.shape)).astype(np.float64)
+                / QUANT_SCALE
+            )
+            sims[:, j] = d / (nm * cn[j])
+    else:
+        raise ValueError(f"assign must be 'float' or 'quantized', not {assign!r}")
+    if n == 1:
+        return np.argmax(sims, axis=1).astype(np.int32)[:, None]
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n].astype(np.int32)
+
+
+def _assign_udf(centroids: np.ndarray, *, assign: str = "float"):
+    """Arrow UDF: each vector's nearest cell (:func:`_nearest_cells`)."""
+    C = np.array(centroids, dtype=np.float64)
 
     def fn(v: pd.Series) -> pd.Series:
         if v.isna().any():
-            # Loud by contract: the coalesce(assign, 0) at the ivf_index
-            # call site exists only for plan shape (non-nullable `cell`
-            # suppresses an inferred isnotnull filter that would double-run
-            # this UDF). It must never become a silent null→cell-0 router,
-            # so reject null vectors here, mirroring the zero-norm contract.
+            # Loud by contract: the coalesce(assign, 0) at the call sites
+            # exists only for plan shape (non-nullable `cell` suppresses an
+            # inferred isnotnull filter that would double-run this UDF). It
+            # must never become a silent null→cell-0 router, so reject null
+            # vectors here, mirroring the zero-norm contract.
             raise ValueError(
-                "null embedding passed to IVF assignment; filter null "
+                "null embedding passed to cell assignment; filter null "
                 "vectors at ingest (cosine cell assignment is undefined)"
             )
-        M = _normalize(np.stack(v.to_numpy()).astype(np.float64))
-        return pd.Series(np.argmax(M @ C.T, axis=1).astype(np.int32))
+        cells = _nearest_cells(np.stack(v.to_numpy()), C, assign=assign)
+        return pd.Series(cells[:, 0])
 
     return F.pandas_udf(fn, "int")
-
-
-def _probe_cells(Q: np.ndarray, centroids: np.ndarray, n_probe: int) -> np.ndarray:
-    """(nq, n_probe) ids of the nearest centroids per query vector — driver
-    math on the collected query matrix (nq × k floats)."""
-    C = _normalize(centroids.astype(np.float64))
-    sims = _normalize(Q) @ C.T
-    return np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
 
 
 def _probe_mask(
     Q: np.ndarray, centroids: np.ndarray, n_probe: int
 ) -> tuple[np.ndarray, list[int]]:
-    """The (nq, n_centroids) mask "query j probes cell c", and the sorted
-    cells any query probes. Both probes filter on that cell set STATICALLY,
-    so a cell-partitioned index scans only probed partitions (partition
-    pruning at plan time, not dynamic pruning at run time)."""
+    """The (nq, n_centroids) mask "query j probes one of its ``n_probe``
+    nearest cells c", and the sorted cells any query probes. Both probes
+    filter on that cell set STATICALLY, so a cell-partitioned index scans
+    only probed partitions (partition pruning at plan time, not dynamic
+    pruning at run time)."""
     mask = np.zeros((len(Q), len(centroids)), dtype=bool)
-    np.put_along_axis(mask, _probe_cells(Q, centroids, n_probe), True, axis=1)
+    np.put_along_axis(mask, _nearest_cells(Q, centroids, n_probe), True, axis=1)
     return mask, np.flatnonzero(mask.any(axis=0)).tolist()
 
 
@@ -114,11 +158,9 @@ def _cosine_lloyd(X: np.ndarray, seeds: np.ndarray, iters: int) -> np.ndarray:
     ``X[seeds]`` seed the centroids, assignment is by cosine, the update is
     the members' mean, the iteration count is fixed, and a cell with no
     members keeps its centroid."""
-    Xn = _normalize(X)
     centroids = X[seeds]
     for _ in range(iters):
-        C = _normalize(centroids)
-        assign = np.argmax(Xn @ C.T, axis=1)  # cosine assignment
+        assign = _nearest_cells(X, centroids)[:, 0]
         for c in range(len(centroids)):
             members = X[assign == c]
             if len(members):
@@ -154,6 +196,33 @@ def ivf_train(
 REFINE_SCALE = float(1 << 20)
 
 
+def _refine_stats(
+    df: DataFrame, centroids: np.ndarray, vec_col: str, assign: str
+) -> DataFrame:
+    """One corpus Lloyd pass as a relation: per (cell, dim), the member
+    count ``n`` and the exact long sum ``sum_q`` of the members'
+    components on the ``REFINE_SCALE`` grid."""
+    qv = F.transform(
+        F.col(vec_col).cast("array<double>"),
+        lambda x: F.floor(x * F.lit(REFINE_SCALE) + F.lit(0.5)).cast("long"),
+    )
+    # two-step select: assignment FIRST, explode second — in a single
+    # select Catalyst plans the Generate below the UDF and the assignment
+    # would re-evaluate once per exploded dim (observed: ArrowEvalPython
+    # above posexplode = dim× redundant matmuls)
+    assigned = spread_small_scan(df.select(F.col(vec_col))).select(
+        F.coalesce(_assign_udf(centroids, assign=assign)(vec_col), F.lit(0)).alias(
+            "cell"
+        ),
+        qv.alias("__qv"),
+    )
+    return (
+        assigned.select("cell", F.posexplode("__qv").alias("dim", "q"))
+        .groupBy("cell", "dim")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("q").alias("sum_q"))
+    )
+
+
 def ivf_refine(
     df: DataFrame,
     centroids: np.ndarray,
@@ -161,7 +230,7 @@ def ivf_refine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iters: int = 1,
-    assign_udf_factory=None,
+    assign: str = "float",
 ) -> np.ndarray:
     """Full-corpus Lloyd refinement of a (sample-trained) quantizer.
 
@@ -171,7 +240,9 @@ def ivf_refine(
     never saw; the classic fix is corpus-scale Lloyd passes: assign every
     vector to its nearest centroid (the map-only assignment UDF), reduce
     per-(cell, dim) component sums, recompute the k×dim centroid matrix
-    driver-side, repeat. Each iteration is one corpus pass:
+    driver-side, repeat. Each iteration is one corpus pass, the stats
+    relation :func:`_refine_stats` (also the oracled ``emb_kmeans_refine``
+    query):
 
     - **Assignment is map-only** (centroid matrix rides the closure, the
       PQ-codebook movement class).
@@ -185,86 +256,20 @@ def ivf_refine(
       ``REFINE_SCALE`` grid (floor(x·S + 0.5), the shared dround idiom)
       and summed as longs — order-independent under any partitioning, so
       refined centroids are bit-identical across reruns, engines, and the
-      numpy mirror (:func:`ivf_refine_reference`). New centroid =
-      sum/n/S in IEEE doubles. Cells with no members keep their previous
-      centroid (standard Lloyd).
+      numpy mirror (``tests/mirrors.py::ivf_refine_reference``). New
+      centroid = sum/n/S in IEEE doubles. Cells with no members keep their
+      previous centroid (standard Lloyd).
 
-    ``assign_udf_factory`` defaults to the float64-matmul
-    :func:`_assign_udf` (fastest); pass
-    ``stupidb_spark.operators.semantic._quant_assign_udf`` for the
-    engine-portable quantized-grid assignment (DuckDB-replayable, used by
-    the oracled ``emb_kmeans_refine`` query).
+    ``assign`` is :func:`_nearest_cells`' mode: ``"float"`` (fastest) or
+    ``"quantized"`` (engine-portable, DuckDB-replayable; the oracled
+    ``emb_kmeans_refine`` query uses it).
     """
-    factory = assign_udf_factory or _assign_udf
     C = centroids.astype(np.float64).copy()
-    k, dim = C.shape
     for _ in range(iters):
-        qv = F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * F.lit(REFINE_SCALE) + F.lit(0.5)).cast(
-                "long"
-            ),
-        )
-        # two-step select: assignment FIRST, explode second — in a single
-        # select Catalyst plans the Generate below the UDF and the
-        # assignment would re-evaluate once per exploded dim (observed:
-        # ArrowEvalPython above posexplode = dim× redundant matmuls)
-        assigned = spread_small_scan(df.select(F.col(vec_col))).select(
-            F.coalesce(factory(C)(vec_col), F.lit(0)).alias("cell"),
-            qv.alias("__qv"),
-        )
-        rows = (
-            assigned.select("cell", F.posexplode("__qv").alias("dim", "q"))
-            .groupBy("cell", "dim")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("q").alias("sq"))
-            .collect()
-        )
-        for r in rows:
+        for r in _refine_stats(df, C, vec_col, assign).collect():
             C[r["cell"], r["dim"]] = (
-                float(r["sq"]) / float(r["n"]) / REFINE_SCALE
+                float(r["sum_q"]) / float(r["n"]) / REFINE_SCALE
             )
-    return C
-
-
-def ivf_refine_reference(
-    V: np.ndarray, centroids: np.ndarray, *, iters: int = 1, quant: bool = False
-) -> np.ndarray:
-    """Driver-side numpy mirror of :func:`ivf_refine` with the identical
-    quantized-sum arithmetic — the differential ground truth. Test-support
-    code. ``quant=True`` mirrors the quantized-grid assignment
-    (``semantic._quant_assign_udf``); False mirrors :func:`_assign_udf`.
-    """
-    from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot
-
-    C = centroids.astype(np.float64).copy()
-    X = V.astype(np.float64)
-    for _ in range(iters):
-        if quant:
-            nm = np.sqrt(_qdot(X, X).astype(np.float64) / QUANT_SCALE)
-            cn = np.sqrt(
-                np.array(
-                    [
-                        _qdot(C[j][None, :], C[j][None, :]).astype(np.float64)[0]
-                        for j in range(len(C))
-                    ]
-                )
-                / QUANT_SCALE
-            )
-            sims = np.empty((len(X), len(C)))
-            for j in range(len(C)):
-                d = (
-                    _qdot(X, np.broadcast_to(C[j], X.shape)).astype(np.float64)
-                    / QUANT_SCALE
-                )
-                sims[:, j] = d / (nm * cn[j])
-            assign = np.argmax(sims, axis=1)
-        else:
-            assign = np.argmax(_normalize(X) @ _normalize(C).T, axis=1)
-        Q = np.floor(X * REFINE_SCALE + 0.5).astype(np.int64)
-        for c in range(len(C)):
-            members = Q[assign == c]
-            if len(members):
-                C[c] = members.sum(axis=0, dtype=np.int64) / len(members) / REFINE_SCALE
     return C
 
 
@@ -279,6 +284,14 @@ def ivf_index(
     (columns: neighbor_id, b_vec, cell). At scale, write this partitioned or
     bucketed by ``cell`` so probes scan only probed cells. A NULL vector
     is not indexed (:func:`~stupidb_spark.operators.similarity.base_scan`)."""
+    return _index_cells(base, centroids, id_col, vec_col, "float")
+
+
+def _index_cells(
+    base: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str, assign: str
+) -> DataFrame:
+    """:func:`ivf_index` in either :func:`_nearest_cells` mode (SemDeDup's
+    exact mode assigns on the quantized grid)."""
     # coalesce-to-0 never fires (argmax always yields an int) but marks
     # `cell` non-nullable, so downstream joins on it don't infer an
     # isnotnull(cell) filter — which would push below the scan spread and
@@ -291,7 +304,10 @@ def ivf_index(
     # ann_topk_ivf 1.50 s with the second pass, 1.32-1.35 s without).
     return base_scan(base, id_col, vec_col).withColumn(
         "cell",
-        F.coalesce(_assign_udf(centroids).asNondeterministic()("b_vec"), F.lit(0)),
+        F.coalesce(
+            _assign_udf(centroids, assign=assign).asNondeterministic()("b_vec"),
+            F.lit(0),
+        ),
     )
 
 
@@ -509,12 +525,11 @@ def _cell_sample(
         .limit(n_train)
         .collect()
     )
-    ids = np.array([r.neighbor_id for r in rows])
-    X = np.stack([np.array(r.b_vec, dtype=np.float64) for r in rows])
     # id-sort so the rebalance's evenly-spaced seeds span the id range —
     # tenured lows and appended highs both get seeds in proportion
-    order = np.argsort(ids)
-    return ids[order], X[order]
+    rows.sort(key=lambda r: r.neighbor_id)
+    ids = np.array([r.neighbor_id for r in rows])
+    return ids, np.stack([np.array(r.b_vec, dtype=np.float64) for r in rows])
 
 
 def ivf_rebalance(
@@ -590,16 +605,16 @@ def ivf_rebalance(
         centroids[c] = sub[0]
         centroids.extend(sub[1:])
         split[c] = ids
-        families[c] = (np.array(ids, dtype=np.int32), _normalize(sub))
+        families[c] = (np.array(ids, dtype=np.int32), sub)
 
     def reassign(v: pd.Series, cell: pd.Series) -> pd.Series:
-        M = _normalize(np.stack(v.to_numpy()).astype(np.float64))
+        M = np.stack(v.to_numpy())
         cells = cell.to_numpy()
         out = np.empty(len(cells), dtype=np.int32)
         for parent, (ids, C) in families.items():
             m = cells == parent
             if m.any():
-                out[m] = ids[np.argmax(M[m] @ C.T, axis=1)]
+                out[m] = ids[_nearest_cells(M[m], C)[:, 0]]
         return pd.Series(out)
 
     reassign_udf = F.pandas_udf(reassign, "int")

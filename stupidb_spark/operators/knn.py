@@ -9,10 +9,11 @@ nothing unbounded ever reaches the driver.
 
 Beyond-reference surface (SURVEY.md §7: the reference has no embedding
 operators). Blocking is the IVF recipe: a sample-trained k-means quantizer
-assigns every base vector to a cell (map-only Arrow pass), every query
-probes its ``n_probe`` nearest cells (map-only — the centroid matrix is a
-bounded closure constant, the PQ-codebook movement class), and scoring
-happens inside (cell, sub-block) tasks.
+gives every row its ``n_probe`` nearest cells in one map-only Arrow pass
+(the family's one kernel, ``ivf.py::_nearest_cells``; the centroid matrix
+is a bounded closure constant, the PQ-codebook movement class). A base row
+lives in the first of them, the cell ``ivf_index`` assigns; a query probes
+all of them; scoring happens inside (cell, sub-block) tasks.
 
 Scale design (100 TB):
 - **One corpus shuffle per side.** Base rows shuffle once onto
@@ -45,18 +46,12 @@ from pyspark.sql import functions as F
 
 from stupidb_spark.operators.dedup import (
     SPREAD_BYTES_PER_TASK,
-    corpus_join_strategy,
     spread_small_scan,
 )
 from stupidb_spark.operators.lineage import cut_lineage
-from stupidb_spark.operators.ivf import (
-    _normalize,
-    ivf_refine,
-    ivf_train,
-)
+from stupidb_spark.operators.ivf import _nearest_cells, ivf_refine, ivf_train
 from stupidb_spark.operators.similarity import (
-    QUANT_SCALE,
-    _qdot,
+    _quant_norms,
     _quant_sims,
     norm_guard,
 )
@@ -144,30 +139,20 @@ def knn_join(
             base, centroids, id_col=id_col, vec_col=vec_col,
             iters=refine_iters,
         )
-    C = _normalize(centroids.astype(np.float64))
 
     @F.pandas_udf("array<int>")
     def probe(v: pd.Series) -> pd.Series:
-        M = _normalize(np.stack(v.to_numpy()).astype(np.float64))
-        sims = M @ C.T
-        # stable argsort: centroid-similarity ties break to the lower cell
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([[int(c) for c in row] for row in top])
+        top = _nearest_cells(np.stack(v.to_numpy()), centroids, n_probe)
+        return pd.Series(top.tolist())
 
-    # ONE corpus Arrow pass for BOTH sides — the probe UDF's leading cell
-    # IS the base assignment: both are the same normalized float64 matmul,
-    # and np.argmax's first-max tie rule equals stable argsort's first
-    # column, so ``__cells[0] == ivf_index's _assign_udf(vec)``
-    # bit-identically. The previous form ran the assignment UDF once under
-    # the cell-count aggregate and AGAIN under the task-stream union (its
-    # subtree was never lineage-cut), plus the query probe UDF — three
-    # corpus passes at scale where one suffices (r14 profile: 12.1 + 8.7 +
-    # part of 10.7 s task time at sf0.1). The lazy localCheckpoint (the
-    # first consumer's job materializes it) serves all four downstream
-    # consumers from local blocks. In the self-join every row is both
-    # sides; otherwise a side tag rides the unioned relation and the sides
-    # are filters over the one checkpoint (union promotes the id type —
-    # the same promotion the task-stream union performed before).
+    # ONE corpus Arrow pass for BOTH sides: a row's leading probe cell is
+    # its base cell, the cell ivf_index assigns (both are the one kernel,
+    # ivf.py::_nearest_cells). The lazy localCheckpoint (the first
+    # consumer's job materializes it) serves all four downstream consumers
+    # from local blocks, so the corpus is scanned and assigned once. In the
+    # self-join every row is both sides; otherwise a side tag rides the
+    # unioned relation and the sides are filters over the one checkpoint
+    # (union promotes the id type).
     carry_type = dict(base.dtypes)[base_carry] if base_carry else None
     carry_b = (
         [F.col(base_carry).alias("__carry")] if base_carry else []
@@ -340,8 +325,7 @@ def knn_join(
         b_ids = Bp["id"].to_numpy()
         q_ids = Qp["id"].to_numpy()
         b_carry = Bp["__carry"].to_numpy() if with_carry else None
-        qnorms = np.sqrt(_qdot(Qm, Qm).astype(np.float64) / QUANT_SCALE)
-        sims = _quant_sims(Bm, Qm, qnorms)  # (nB, nQ)
+        sims = _quant_sims(Bm, Qm, _quant_norms(Qm))  # (nB, nQ)
         out_q, out_n, out_s, out_c = [], [], [], []
         for j in range(len(q_ids)):
             col = sims[:, j]
@@ -409,40 +393,3 @@ def knn_join(
         F.col("query").alias("query_id"),
         F.posexplode("top").alias("__pos", "__t"),
     ).select(*out_cols)
-
-
-def knn_join_reference(
-    base_ids: np.ndarray,
-    base_vecs: np.ndarray,
-    query_ids: np.ndarray,
-    query_vecs: np.ndarray,
-    *,
-    k_neighbors: int,
-    self_join: bool,
-) -> list[tuple]:
-    """Driver-side exact brute-force mirror with the identical quantized
-    arithmetic and (sim DESC, id ASC) tie-break — the ground truth for the
-    exactness (n_probe = n_cells) and recall tests. Test-support code.
-
-    Returns sorted ``(query_id, rank, neighbor_id, sim)`` tuples.
-    """
-    B = base_vecs.astype(np.float64)
-    Q = query_vecs.astype(np.float64)
-    qnorms = np.sqrt(_qdot(Q, Q).astype(np.float64) / QUANT_SCALE)
-    sims = _quant_sims(B, Q, qnorms)  # (nB, nQ)
-    out = []
-    for j in range(len(query_ids)):
-        col = sims[:, j]
-        mask = (
-            base_ids != query_ids[j]
-            if self_join
-            else np.ones(len(base_ids), bool)
-        )
-        ids_j = base_ids[mask]
-        col_j = col[mask]
-        order = np.lexsort((ids_j, -col_j))[:k_neighbors]
-        for r, o in enumerate(order):
-            out.append(
-                (query_ids[j].item(), r + 1, ids_j[o].item(), float(col_j[o]))
-            )
-    return sorted(out)

@@ -46,6 +46,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stupidb_spark.operators.ivf import (
+    IVF_ITERS,
+    IVF_TRAIN_ROWS,
+    _cosine_lloyd,
+    _nearest_cells,
+    _probe_mask,
+)
 from stupidb_spark.operators.similarity import (
     _batch_vectors,
     _score_topk,
@@ -256,8 +263,6 @@ def ivfpq_build(
     Arrow batch. Returns (cell_centroids, codebooks, table), equal to
     ``ivf_train`` and :func:`pq_train` at their defaults: both samples are
     lowest-id prefixes, so the larger one holds the smaller."""
-    from stupidb_spark.operators.ivf import IVF_ITERS, IVF_TRAIN_ROWS, _cosine_lloyd
-
     X = collect_train_matrix(base, id_col, vec_col, max(IVF_TRAIN_ROWS, PQ_TRAIN_ROWS))
     cells = X[:IVF_TRAIN_ROWS]
     centroids = _cosine_lloyd(cells, np.arange(min(n_cells, len(cells))), IVF_ITERS)
@@ -279,9 +284,6 @@ def ivfpq_encode(
     yielding (neighbor_id, cell, code). Used by :func:`ivfpq_build` for the
     initial table and by :func:`ivfpq_append` for deltas. A NULL vector is
     not encoded."""
-    Cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
     id_type = dict(vectors.dtypes)[id_col]
 
     def enc(batches):
@@ -289,11 +291,10 @@ def ivfpq_encode(
             if not len(pdf):
                 continue
             M = _batch_vectors(pdf)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "cell": np.argmax(Mn @ Cn.T, axis=1).astype(np.int32),
+                    "cell": _nearest_cells(M, centroids)[:, 0],
                     "code": list(_pq_codes(M, books)),
                 }
             )
@@ -343,8 +344,6 @@ def ivfpq_topk(
     top-k scan (``similarity.py::_score_topk``) with the IVF probe mask
     (``ivf.py::_probe_mask``) and the PQ lookup tables instead of float dot
     products. Recall compounds both approximations; pinned in tests."""
-    from stupidb_spark.operators.ivf import _probe_mask
-
     q_ids, Q = collect_query_matrix(queries, id_col, vec_col)
     if not len(q_ids):
         return no_neighbors(base, id_col, "pq_score", k)

@@ -96,14 +96,6 @@ def pca_project(
     return df.withColumn(out_col, fn(F.col(vec_col)))
 
 
-def pca_reference(
-    X: np.ndarray, model: PCAModel
-) -> np.ndarray:
-    """Driver-side numpy twin of :func:`pca_project` (same float64 ops in
-    the same order) for the differential tests."""
-    return (X.astype(np.float64) - model.mean) @ model.components.T
-
-
 def save_pca_model(spark, model: PCAModel, path: str) -> None:
     """Persist the fitted projection as a parquet model table — the
     durable form that outlives the session (the ``save_ivf_index`` /
@@ -234,34 +226,3 @@ def pca_train_full(
     return PCAModel(
         mean=mean, components=comp, explained_var=w[order].copy()
     )
-
-
-def pca_train_full_reference(X: np.ndarray, *, k: int = 8) -> PCAModel:
-    """Driver-side numpy mirror of :func:`pca_train_full` with the
-    identical integer-grid moments and float64 fold — the differential
-    ground truth. Test-support code."""
-    M = X.astype(np.float64)
-    n, d = M.shape
-    U = np.floor(M * _PCA_S1 + 0.5).astype(np.int64)
-    S = U.sum(axis=0, dtype=np.int64)
-    iu, ju = np.triu_indices(d)
-    P = np.zeros(len(iu), dtype=np.int64)
-    for r in range(n):
-        P += np.floor(M[r][iu] * M[r][ju] * _PCA_S2 + 0.5).astype(np.int64)
-    mean = S.astype(np.float64) / _PCA_S1 / n
-    cov = np.zeros((d, d))
-    for idx in range(len(iu)):
-        i, j = int(iu[idx]), int(ju[idx])
-        c = (
-            int(P[idx]) / _PCA_S2
-            - (int(S[i]) / _PCA_S1) * (int(S[j]) / _PCA_S1) / n
-        ) / (n - 1)
-        cov[i, j] = cov[j, i] = c
-    w, V = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    comp = V[:, order].T.copy()
-    for i in range(comp.shape[0]):
-        jmax = int(np.argmax(np.abs(comp[i])))
-        if comp[i, jmax] < 0:
-            comp[i] = -comp[i]
-    return PCAModel(mean=mean, components=comp, explained_var=w[order].copy())

@@ -16,7 +16,12 @@ shape is introduced:
     embedding_near_dup_pairs  salted block-local scoring; one oversized
                               cell can never serialize onto one task
     connected_components      checkpointed min-label propagation
-    keep-one                  a hash aggregate (min_by), never a window
+    keep-one                  min_by over one component-keyed window
+
+Both assignment modes build the index the ``ivf_index`` way (the shared
+base scan, then the family's one nearest-centroid kernel,
+``ivf.py::_nearest_cells``), so a NULL vector is dropped in either mode;
+``assign="quantized"`` only moves the cosines onto the quantized grid.
 
 At 100 TB the within-cell pair step is the budget: cells from a k-means
 quantizer are balanced by construction (unlike raw category labels), and
@@ -31,64 +36,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import pandas as pd
-
-from stupidb_spark.operators.dedup import (
-    SPREAD_BYTES_PER_TASK,
-    corpus_join_strategy,
-    spread_small_scan,
-)
+from stupidb_spark.operators.dedup import corpus_join_strategy
 from stupidb_spark.operators.lineage import cut_lineage
-from stupidb_spark.operators.ivf import ivf_index, ivf_refine, ivf_train
+from stupidb_spark.operators.ivf import _index_cells, ivf_refine, ivf_train
 from stupidb_spark.operators.components import connected_components
 from stupidb_spark.operators.similarity import (
-    QUANT_SCALE,
-    _qdot,
     embedding_near_dup_pairs,
     pair_cosine,
 )
-
-
-def _quant_assign_udf(centroids: np.ndarray):
-    """Cell assignment on the quantized-cosine grid (tie → lowest cell) —
-    the engine-portable twin of ``ivf._assign_udf``. The float64-matmul
-    assignment is faster but its dot products depend on summation order,
-    so near-ties can flip across engines; this one is the exact
-    ``sql_pair_cosine`` construction per (vector, centroid), making the
-    assignment (and everything downstream of it) DuckDB-replayable."""
-    C = centroids.astype(np.float64)
-    cn = np.array(
-        [
-            np.sqrt(
-                _qdot(C[j][None, :], C[j][None, :]).astype(np.float64)[0]
-                / QUANT_SCALE
-            )
-            for j in range(len(C))
-        ]
-    )
-
-    def fn(v: pd.Series) -> pd.Series:
-        if v.isna().any():
-            # Same loud contract as ivf._assign_udf: the plan-shape
-            # coalesce downstream must never silently route nulls to cell 0.
-            raise ValueError(
-                "null embedding passed to semantic cell assignment; filter "
-                "null vectors at ingest (cosine is undefined)"
-            )
-        M = np.stack(v.to_numpy()).astype(np.float64)
-        nm = np.sqrt(_qdot(M, M).astype(np.float64) / QUANT_SCALE)
-        sims = np.empty((len(M), len(C)))
-        for j in range(len(C)):
-            d = (
-                _qdot(M, np.broadcast_to(C[j], M.shape)).astype(np.float64)
-                / QUANT_SCALE
-            )
-            sims[:, j] = d / (nm * cn[j])
-        # np.argmax returns the FIRST max — tie → lowest cell, matching
-        # the oracle's ORDER BY sim DESC, cell
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
-
-    return F.pandas_udf(fn, "int")
 
 
 def semantic_dedup(
@@ -158,24 +113,9 @@ def semantic_dedup(
     # ~10% end-to-end at sf0.1; at corpus scale it is two saved full-scan
     # decode+UDF passes. On a real cluster set SPARK_GRAFT_CHECKPOINT_DIR
     # (operators/lineage.py) to make this cut a reliable checkpoint.
-    if assign == "quantized":
-        # engine-portable assignment (see _quant_assign_udf) — same relation
-        # shape as ivf_index, same single map-only pass, same
-        # volume-derived spread width (the assignment is light per byte;
-        # see ivf_index)
-        raw = spread_small_scan(
-            df.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("b_vec"),
-            ),
-            bytes_per_task=SPREAD_BYTES_PER_TASK,
-        )
-        assigned = raw.withColumn(
-            "cell", _quant_assign_udf(centroids)("b_vec")
-        )
-    else:
-        assigned = ivf_index(df, centroids, id_col=id_col, vec_col=vec_col)
-    indexed = cut_lineage(assigned, eager=False)
+    indexed = cut_lineage(
+        _index_cells(df, centroids, id_col, vec_col, assign), eager=False
+    )
 
     # Model side: k×dim doubles — broadcast by construction (bounded like
     # the PQ codebooks), never estimate-driven.
@@ -239,80 +179,3 @@ def semantic_dedup(
         "centroid_sim",
         (F.col("node") == keep_id).alias("keep"),
     )
-
-
-def semantic_dedup_reference(
-    ids: np.ndarray,
-    vecs: np.ndarray,
-    centroids: np.ndarray,
-    *,
-    threshold: float,
-) -> dict[int, tuple[int, bool]]:
-    """Driver-side numpy oracle for :func:`semantic_dedup` — same
-    quantized-cosine arithmetic, brute-force within-cell pairs, union-find
-    components, identical keep rule. Test-support code (used by the
-    differential in ``tests/test_semantic.py``); lives here so the two
-    implementations' arithmetic stays side by side.
-
-    Returns ``{id: (component, keep)}``.
-    """
-    from stupidb_spark.operators.similarity import QUANT_SCALE
-
-    def qdot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        return np.floor(A * B * QUANT_SCALE + 0.5).astype(np.int64).sum(axis=1)
-
-    def qcos(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        d = qdot(A, B).astype(np.float64) / QUANT_SCALE
-        na = np.sqrt(qdot(A, A).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(qdot(B, B).astype(np.float64) / QUANT_SCALE)
-        return d / (na * nb)
-
-    X = vecs.astype(np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    Cn = centroids.astype(np.float64)
-    cn = np.linalg.norm(Cn, axis=1, keepdims=True)
-    cn[cn == 0] = 1.0
-    assign = np.argmax((X / norms) @ (Cn / cn).T, axis=1)
-
-    parent = {int(i): int(i) for i in ids}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # min-id root to mirror connected_components' label contract
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    for c in np.unique(assign):
-        m = np.where(assign == c)[0]
-        for ii in range(len(m)):
-            a = m[ii]
-            if len(m) > ii + 1:
-                sims = qcos(
-                    np.repeat(X[a][None, :], len(m) - ii - 1, axis=0),
-                    X[m[ii + 1 :]],
-                )
-                for jj, s in zip(m[ii + 1 :], sims):
-                    if s >= threshold:
-                        union(int(ids[a]), int(ids[jj]))
-
-    csim = qcos(X, centroids.astype(np.float64)[assign])
-    comp_of = {int(i): find(int(i)) for i in ids}
-    # keep = argmin (centroid_sim, id) per component
-    best: dict[int, tuple[float, int]] = {}
-    for idx, i in enumerate(ids):
-        key = comp_of[int(i)]
-        cand = (float(csim[idx]), int(i))
-        if key not in best or cand < best[key]:
-            best[key] = cand
-    return {
-        int(i): (comp_of[int(i)], best[comp_of[int(i)]][1] == int(i))
-        for i in ids
-    }

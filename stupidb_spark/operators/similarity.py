@@ -109,9 +109,7 @@ def pair_cosine(a: Column, b: Column) -> Column:
         A = np.stack(av.to_numpy()).astype(np.float64)
         B = np.stack(bv.to_numpy()).astype(np.float64)
         d = _qdot(A, B).astype(np.float64) / QUANT_SCALE
-        na = np.sqrt(_qdot(A, A).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(_qdot(B, B).astype(np.float64) / QUANT_SCALE)
-        return pd.Series(d / (na * nb))
+        return pd.Series(d / (_quant_norms(A) * _quant_norms(B)))
 
     return F.pandas_udf(fn, "double")(a, b)
 
@@ -161,10 +159,11 @@ def collect_train_matrix(
 ) -> np.ndarray:
     """Driver-side training sample of an ANN quantizer: the vectors of the
     ``n_train`` lowest ids, id-sorted — one bounded TakeOrdered collect, so
-    training cost is independent of table size. A NULL vector matches
-    nothing (the :func:`collect_query_matrix` rule), so it is not sampled."""
+    training cost is independent of table size. A row with a NULL id or a
+    NULL vector matches nothing (the :func:`collect_query_matrix` rule), so
+    it is not sampled."""
     rows = (
-        df.filter(F.col(vec_col).isNotNull())
+        df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy("_id")
         .limit(n_train)
@@ -176,9 +175,9 @@ def collect_train_matrix(
 
 
 def base_scan(base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """The base side of an ANN operator as (neighbor_id, b_vec) rows. A NULL
-    vector matches nothing (the :func:`collect_query_matrix` rule), so its
-    row is dropped.
+    """The base side of an ANN operator as (neighbor_id, b_vec) rows. A row
+    with a NULL id or a NULL vector matches nothing (the
+    :func:`collect_query_matrix` rule), so it is dropped.
 
     The scan is spread because a small base file arrives as one partition
     and would put the whole scoring loop on one core; at scale the scan is
@@ -186,7 +185,7 @@ def base_scan(base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     the per-batch numpy is light per byte, so core-count width on a
     kilobyte-scale scan only multiplies fixed task overhead."""
     return spread_small_scan(
-        base.filter(F.col(vec_col).isNotNull()).select(
+        base.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
         ),
         bytes_per_task=SPREAD_BYTES_PER_TASK,
@@ -567,7 +566,7 @@ def embedding_near_dup_pairs(
         order = np.argsort(pdf["id"].to_numpy(), kind="stable")
         ids = pdf["id"].to_numpy()[order]
         V = np.stack(pdf["vec"].to_numpy()).astype(np.float64)[order]
-        norms = np.sqrt(_qdot(V, V).astype(np.float64) / QUANT_SCALE)
+        norms = _quant_norms(V)
         out_a, out_b, out_s = [], [], []
         # chunk rows so the (chunk, n, dim) product tensor stays ~2M doubles
         chunk = max(1, 2_000_000 // (n * V.shape[1]))
@@ -594,8 +593,7 @@ def embedding_near_dup_pairs(
         ids_b = B["id"].to_numpy()
         VA = np.stack(A["vec"].to_numpy()).astype(np.float64)
         VB = np.stack(B["vec"].to_numpy()).astype(np.float64)
-        na = np.sqrt(_qdot(VA, VA).astype(np.float64) / QUANT_SCALE)
-        nb = np.sqrt(_qdot(VB, VB).astype(np.float64) / QUANT_SCALE)
+        na, nb = _quant_norms(VA), _quant_norms(VB)
         out_a, out_b, out_s = [], [], []
         chunk = max(1, 2_000_000 // (len(B) * VA.shape[1]))
         for s in range(0, len(A), chunk):

@@ -581,45 +581,35 @@ def _km_refine_sql() -> str:
 
 @q("emb_kmeans_refine", _km_refine_sql())
 def emb_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One corpus-scale Lloyd refinement pass (operators/ivf.py::
-    ivf_refine) from the literal grid quantizer, as the distributed stats
-    relation the driver folds into new centroids: per-(cell, dim) member
-    count, exact quantized component sum, and the refined centroid value.
+    """One corpus-scale Lloyd refinement pass from the literal grid
+    quantizer, as the distributed stats relation the driver folds into new
+    centroids: per-(cell, dim) member count, exact quantized component sum,
+    and the refined centroid value.
 
-    The 100 TB shape under the full oracle: assignment is the map-only
-    quantized-grid UDF (engine-portable — ties break to the lowest cell
-    exactly like the SQL's ORDER BY sim DESC, cell), dims explode and
-    hash-aggregate with map-side combine, so the shuffle carries at most
+    The relation is ``ivf_refine``'s own pass (``operators/ivf.py::
+    _refine_stats``) with the quantized-grid assignment, so ties break to
+    the lowest cell exactly like the SQL's ORDER BY sim DESC, cell. The
+    assignment is map-only and selected before the dims explode; the
+    (cell, dim) aggregate combines map-side, so the shuffle carries at most
     tasks × k × dim partial rows and the output is the k×dim model. Sums
     are longs on the REFINE_SCALE grid — order-independent, so the
     relation is hash-stable under any partitioning."""
     import numpy as np
 
-    from stupidb_spark.operators.dedup import spread_small_scan
-    from stupidb_spark.operators.ivf import REFINE_SCALE
-    from stupidb_spark.operators.semantic import _quant_assign_udf
+    from stupidb_spark.operators.ivf import REFINE_SCALE, _refine_stats
 
-    C = np.array(_KM_CENTROIDS, dtype=np.float64)
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.floor(x * F.lit(REFINE_SCALE) + F.lit(0.5)).cast("long"),
+    stats = _refine_stats(
+        emb, np.array(_KM_CENTROIDS), "embedding", assign="quantized"
     )
-    # two-step select (assignment, then explode) so the assignment UDF
-    # evaluates once per VECTOR, not once per exploded dim — see
-    # ivf_refine's plan note
-    assigned = spread_small_scan(emb.select("embedding")).select(
-        F.coalesce(_quant_assign_udf(C)("embedding"), F.lit(0)).alias("cell"),
-        qv.alias("__qv"),
-    ).select("cell", F.posexplode("__qv").alias("dim", "qc"))
-    return assigned.groupBy("cell", F.col("dim").cast("long").alias("dim")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("qc").alias("sum_q"),
-        (
-            F.sum("qc").cast("double")
-            / F.count(F.lit(1))
-            / F.lit(REFINE_SCALE)
-        ).alias("centroid"),
+    return stats.select(
+        "cell",
+        F.col("dim").cast("long").alias("dim"),
+        "n",
+        "sum_q",
+        (F.col("sum_q").cast("double") / F.col("n") / F.lit(REFINE_SCALE)).alias(
+            "centroid"
+        ),
     )
 
 

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stupidb_spark.operators.similarity import QUANT_SCALE, _qdot, _quant_sims
+from stupidb_spark.operators.similarity import _quant_norms, _quant_sims
 from stupidb_spark.sources.catalog import read_fixture
 
 # Bounded-model-state bar for the closure-riding reference: 64k labeled
@@ -169,7 +169,7 @@ def knn_label_stream(
     @F.pandas_udf(f"pred_label {label_type}, n_votes int")
     def classify(v: pd.Series) -> pd.DataFrame:
         M = np.stack(v.to_numpy()).astype(np.float64)
-        mnorms = np.sqrt(_qdot(M, M).astype(np.float64) / QUANT_SCALE)
+        mnorms = _quant_norms(M)
         # Loud guard, matching the batch-side norm_guard contract: a
         # zero-norm (or non-finite) streamed vector would give NaN
         # similarities, an empty candidate set (NaN >= kth is False), and

@@ -17,8 +17,8 @@ from stupidb_spark.operators.bpe import (
     bpe_encode,
     bpe_merges_df,
     bpe_train,
-    bpe_train_reference,
 )
+from tests.mirrors import bpe_train_reference
 
 TEXTS = [
     "the cat sat on the mat",

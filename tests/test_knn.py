@@ -10,9 +10,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from stupidb_spark.operators.knn import knn_join, knn_join_reference
+from stupidb_spark.operators.knn import knn_join
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
+from tests.mirrors import knn_join_reference
 
 
 @pytest.fixture(scope="module")
@@ -254,3 +255,48 @@ def test_recall_on_clustered_manifold(spark):
         for r in knn_join(df, k_neighbors=5, n_cells=8, n_probe=4).collect()
     }
     assert len(got & want) / len(want) >= 0.95  # 1.000 seeded
+
+
+@pytest.mark.parametrize("assign", ["float", "quantized"])
+def test_nearest_cells_ties_go_to_the_lower_cell(assign):
+    """The one cell assignment breaks a centroid tie toward the lower cell,
+    for the single nearest cell and for a probe list alike."""
+    from stupidb_spark.operators.ivf import _nearest_cells
+
+    M = np.array([[0.1, 1.0], [0.0, 2.0], [1.0, 0.2]])
+    # cells 1 and 2 are the same centroid, and so are cells 0 and 3
+    C = np.array([[1.0, 0.0], [0.0, 1.0], [0.0, 1.0], [1.0, 0.0]])
+    assert _nearest_cells(M, C, assign=assign).tolist() == [[1], [1], [0]]
+    assert _nearest_cells(M, C, 2, assign=assign).tolist() == [
+        [1, 2],
+        [1, 2],
+        [0, 3],
+    ]
+
+
+def test_leading_probe_cell_is_the_ivf_index_cell(emb, ground):
+    """With one probe a row's neighbors are exactly its brute-force
+    neighbors inside its ``ivf_index`` cell, so the kNN join's leading
+    probe cell (where a base row lives and what a query probes) is the
+    cell ``ivf_index`` assigns."""
+    from stupidb_spark.operators.ivf import ivf_index, ivf_train
+
+    ids, V = ground
+    base = emb.select("vec_id", "embedding")
+    indexed = ivf_index(base, ivf_train(base, k=8)).collect()
+    cell_of = {r.neighbor_id: r.cell for r in indexed}
+    cells = np.array([cell_of[i] for i in ids])
+    want = sorted(
+        row
+        for c in np.unique(cells)
+        for row in knn_join_reference(
+            ids[cells == c],
+            V[cells == c],
+            ids[cells == c],
+            V[cells == c],
+            k_neighbors=5,
+            self_join=True,
+        )
+    )
+    got = _tuples(knn_join(emb, k_neighbors=5, n_cells=8, n_probe=1))
+    assert got == want

@@ -21,6 +21,9 @@ BUILDER = "SparkSession" + ".builder"
 PERSISTS = (".per" + "sist(", ".ca" + "che()", "unper" + "sist")
 MODULE_CACHE = re.compile(r"_\w*CA" + "CHE")
 ANN_MODULES = [PKG / "operators" / f"{name}.py" for name in ("similarity", "ivf", "pq")]
+CELL_USERS = [PKG / "operators" / f"{name}.py" for name in ("knn", "semantic", "pq")] + [
+    PKG / "queryset" / "similarity.py"
+]
 
 
 def test_write_stream_only_inside_run_stream():
@@ -157,3 +160,50 @@ def test_one_topk_scorer():
     assert len(sites) == 1, sites
     assert sites[0].startswith("stupidb_spark/operators/similarity.py:"), sites
     assert not [p for p in PKG.rglob("*.py") if "_local_lloyd" in p.read_text()]
+
+
+def test_one_cell_assignment():
+    """The embedding family has one nearest-centroid kernel,
+    ``operators/ivf.py::_nearest_cells``: the only function in ``ivf.py``
+    that ranks centroids (``argmax``/``argsort``) or normalizes vectors.
+    The kNN join, SemDeDup, IVF-PQ and the refine query rank no centroids
+    themselves, and the retired per-operator copies are gone."""
+    rankers = []
+    for path in CELL_USERS:
+        tree = ast.parse(path.read_text())
+        for name in ("argmax", "argsort"):
+            rankers += [f"{path.relative_to(ROOT)}:{n.lineno}" for n in _calls(tree, name)]
+    assert rankers == []
+
+    ivf = ast.parse((PKG / "operators" / "ivf.py").read_text())
+    kernels = {
+        fn.name
+        for fn in ast.walk(ivf)
+        if isinstance(fn, ast.FunctionDef)
+        and any(_calls(fn, name) for name in ("argmax", "argsort", "_normalize"))
+    }
+    assert kernels == {"_nearest_cells"}, kernels
+
+    retired = ("_quant_assign" + "_udf", "_probe" + "_cells")
+    sources = [*PKG.rglob("*.py"), *(ROOT / "scripts").rglob("*.py"), *(ROOT / "tests").rglob("*.py")]
+    offenders = [
+        f"{path.relative_to(ROOT)}: {name}"
+        for path in sorted(sources)
+        for name in retired
+        if name in path.read_text()
+    ]
+    assert offenders == []
+
+
+def test_no_test_mirrors_in_package():
+    """The driver-side mirrors the differential tests compare against live
+    in ``tests/mirrors.py``: the package defines no ``*_reference`` and no
+    ``rolling_hash_py``."""
+    mirrors = [
+        f"{path.relative_to(ROOT)}:{node.lineno}: {node.name}"
+        for path in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef)
+        and (node.name.endswith("_reference") or node.name == "rolling_hash_py")
+    ]
+    assert mirrors == []

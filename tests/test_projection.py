@@ -10,11 +10,11 @@ from pyspark.sql import functions as F
 
 from stupidb_spark.operators.projection import (
     pca_project,
-    pca_reference,
     pca_train,
 )
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
+from tests.mirrors import pca_reference, pca_train_full_reference
 
 
 @pytest.fixture(scope="module")
@@ -115,10 +115,7 @@ def test_pca_train_full_matches_mirror_bitwise(spark):
     # on identical inputs
     import numpy as np
 
-    from stupidb_spark.operators.projection import (
-        pca_train_full,
-        pca_train_full_reference,
-    )
+    from stupidb_spark.operators.projection import pca_train_full
 
     rng = np.random.RandomState(5)
     X = rng.randn(300, 12) * 2
@@ -140,11 +137,7 @@ def test_pca_train_full_beats_biased_sample(spark):
     # top-k projection over the WHOLE corpus.
     import numpy as np
 
-    from stupidb_spark.operators.projection import (
-        pca_reference,
-        pca_train,
-        pca_train_full,
-    )
+    from stupidb_spark.operators.projection import pca_train, pca_train_full
 
     rng = np.random.RandomState(13)
     centers = rng.randn(20, 16) * 5

@@ -376,7 +376,8 @@ BPE_SLOW = settings(
 @given(texts=CORPUS, batch=st.sampled_from([1, 3]))
 @BPE_SLOW
 def test_bpe_train_matches_mirror_on_random_corpora(spark, texts, batch):
-    from stupidb_spark.operators.bpe import bpe_train, bpe_train_reference
+    from stupidb_spark.operators.bpe import bpe_train
+    from tests.mirrors import bpe_train_reference
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"

@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 from stupidb_spark.operators.ivf import (
     REFINE_SCALE,
     ivf_refine,
-    ivf_refine_reference,
 )
 from stupidb_spark.queryset import QUERIES
 from tests.conftest import SF_DIR
+from tests.mirrors import ivf_refine_reference, knn_join_reference
 
 
 def _clustered(n_per=50, k=3, dim=8, seed=7):
@@ -45,13 +45,9 @@ def test_refine_matches_numpy_mirror_bitwise(clustered_df):
 
 
 def test_refine_quantized_assignment_matches_mirror(clustered_df):
-    from stupidb_spark.operators.semantic import _quant_assign_udf
-
     df, X = clustered_df
     start = X[:3].copy()
-    got = ivf_refine(
-        df, start, iters=1, assign_udf_factory=_quant_assign_udf
-    )
+    got = ivf_refine(df, start, iters=1, assign="quantized")
     want = ivf_refine_reference(X, start, iters=1, quant=True)
     assert np.array_equal(got, want)
 
@@ -102,7 +98,6 @@ def test_refine_improves_probe_recall_on_biased_sample(spark):
     import numpy as np
 
     from stupidb_spark.operators.ivf import ivf_index, ivf_probe, ivf_train
-    from stupidb_spark.operators.knn import knn_join_reference
 
     rng = np.random.RandomState(11)
     k_clusters, per, dim = 40, 50, 32
@@ -166,7 +161,7 @@ def test_knn_join_refine_iters_reaches_full_recall(spark):
     old plan exactly."""
     import numpy as np
 
-    from stupidb_spark.operators.knn import knn_join, knn_join_reference
+    from stupidb_spark.operators.knn import knn_join
 
     rng = np.random.RandomState(11)
     k_clusters, per, dim = 40, 50, 32

@@ -10,12 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from stupidb_spark.operators.ivf import ivf_train
-from stupidb_spark.operators.semantic import (
-    semantic_dedup,
-    semantic_dedup_reference,
-)
+from stupidb_spark.operators.semantic import semantic_dedup
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
+from tests.mirrors import semantic_dedup_reference
 
 
 @pytest.fixture(scope="module")
@@ -67,3 +65,21 @@ def test_semantic_dedup_deterministic(spark, emb):
     a = sorted(map(tuple, semantic_dedup(emb, k=16, threshold=0.4).collect()))
     b = sorted(map(tuple, semantic_dedup(emb, k=16, threshold=0.4).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("assign", ["float", "quantized"])
+def test_semantic_dedup_drops_null_vector_rows(spark, emb, assign):
+    """Both assignment modes build the index the ``ivf_index`` way, so a
+    row whose vector is NULL matches nothing in either: adding one leaves
+    the result unchanged."""
+    base = emb.select("vec_id", "embedding")
+    centroids = ivf_train(base, k=16)
+    null_row = spark.createDataFrame([(99_999, None)], base.schema)
+
+    def run(df):
+        out = semantic_dedup(
+            df, centroids=centroids, assign=assign, threshold=0.6, max_block=1024
+        )
+        return sorted(map(tuple, out.collect()))
+
+    assert run(base.unionByName(null_row)) == run(base)

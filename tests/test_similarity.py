@@ -83,7 +83,7 @@ def test_ivf_index_save_load_prunes(spark):
     import uuid
 
     from stupidb_spark.operators.ivf import (
-        _probe_cells,
+        _nearest_cells,
         build_ivf_index,
         ivf_probe,
         load_ivf_index,
@@ -108,7 +108,7 @@ def test_ivf_index_save_load_prunes(spark):
         # pruning: the probe's cell filter reads only probed partitions
         _, Q = collect_query_matrix(queries, "vec_id", "embedding")
         probed = sorted(
-            {int(c) for row in _probe_cells(Q, loaded.centroids, 6) for c in row}
+            {int(c) for row in _nearest_cells(Q, loaded.centroids, 6) for c in row}
         )
         from stupidb_spark.plans import formatted_plan
 
@@ -800,16 +800,15 @@ def test_ivf_assignment_rejects_null_embedding(spark):
     import pytest
 
     from stupidb_spark.operators.ivf import _assign_udf
-    from stupidb_spark.operators.semantic import _quant_assign_udf
 
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, None)], "vec_id long, embedding array<double>"
     )
     C = np.array([[1.0, 0.0], [0.0, 1.0]])
-    for factory in (_assign_udf, _quant_assign_udf):
+    for assign in ("float", "quantized"):
         with pytest.raises(Exception) as ei:
             df.select(
-                F.coalesce(factory(C)("embedding"), F.lit(0))
+                F.coalesce(_assign_udf(C, assign=assign)("embedding"), F.lit(0))
             ).collect()
         assert "null embedding" in str(ei.value)
 
@@ -933,15 +932,22 @@ def test_ann_operators_skip_null_and_empty_query_sets(spark, op):
     "op", ["brute_force_topk", "lsh_topk", "ivf_probe", "pq_topk", "ivfpq_topk"]
 )
 def test_ann_operators_skip_null_base_vectors(spark, op):
-    """The query side's rule on the base side: a base row whose vector is
-    NULL matches nothing, so adding one leaves every result unchanged —
-    neither the shared base scan nor the shared training sample raises."""
+    """The query side's rule on the base side: a base row whose vector or
+    id is NULL matches nothing, so adding one leaves every result unchanged
+    — neither the shared base scan nor the shared training sample raises,
+    returns a NULL neighbor, or trains on the row (NULL ids sort first)."""
+    from stupidb_spark.operators.ivf import ivf_train
+
     emb = _emb(spark).select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 3)
     expected = _ann_search(op, emb)(queries)
-    null_row = spark.createDataFrame([(99_999, None)], emb.schema)
-    got = _ann_search(op, emb.unionByName(null_row))(queries)
+    null_rows = spark.createDataFrame(
+        [(99_999, None), (None, queries.first().embedding)], emb.schema
+    )
+    with_nulls = emb.unionByName(null_rows)
+    got = _ann_search(op, with_nulls)(queries)
     assert sorted(got.collect()) == sorted(expected.collect())
+    assert ivf_train(with_nulls).tobytes() == ivf_train(emb).tobytes()
 
 
 def test_ivfpq_build_trains_from_one_sample(spark):

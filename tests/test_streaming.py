@@ -336,9 +336,9 @@ def test_knn_label_stream_matches_batch_mirror(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from stupidb_spark.operators.knn import knn_join_reference
     from stupidb_spark.sources import load_table
     from stupidb_spark.streaming import knn_label_stream, stream_embeddings
+    from tests.mirrors import knn_join_reference
 
     d = SCRATCH / f"stream-knnlab-{uuid.uuid4().hex[:8]}"
     d.mkdir(parents=True)

@@ -6,10 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stupidb_spark.functions.text import rolling_hash_py
 from stupidb_spark.queryset import QUERIES
 from stupidb_spark.sources import load_table
 from tests.conftest import SF_DIR
+from tests.mirrors import rolling_hash_py
 
 
 def test_rolling_fingerprint_matches_python_reference(spark):
